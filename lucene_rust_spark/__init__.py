@@ -25,22 +25,30 @@ throughput configuration for pooled workers.
 
 import ctypes
 import os
+import sys
 
-# children (JVM -> python workers) inherit these before their first malloc
-os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
-os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+# The engine's PySpark daemon (pydaemon.py) imports this package before it
+# forks the workers; it must stay light and keep the allocator the
+# environment gave it, which the variables below already set for its
+# workers (the JVM that starts it inherited them from the driver).
+_IN_DAEMON = "lucene_rust_spark.pydaemon" in getattr(sys, "orig_argv", ())
 
-try:  # this process (may already have a live malloc: use mallopt, not env)
-    _libc = ctypes.CDLL("libc.so.6")
-    _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-    _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-except Exception:  # non-glibc platform: defaults apply
-    pass
+if not _IN_DAEMON:
+    # children (JVM -> python workers) inherit these before their first malloc
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
+    os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
 
-try:
-    import pyarrow as _pa
+    try:  # this process (may already have a live malloc: use mallopt, not env)
+        _libc = ctypes.CDLL("libc.so.6")
+        _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
+        _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
+    except Exception:  # non-glibc platform: defaults apply
+        pass
 
-    _pa.set_memory_pool(_pa.system_memory_pool())
-except Exception:
-    pass
+    try:
+        import pyarrow as _pa
+
+        _pa.set_memory_pool(_pa.system_memory_pool())
+    except Exception:
+        pass

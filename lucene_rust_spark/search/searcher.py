@@ -67,6 +67,11 @@ DRIVER_EXEC_MAX_POSTINGS = 1_000_000
 # score/combine/rank pipeline still runs per query). Bounded by postings
 # held; invalidated with the searcher view (refresh() rebuilds the reader)
 DRIVER_POSTINGS_CACHE_MAX = 4_000_000
+# mapInPandas output schema of the fused plan: a StructType is sent as JSON,
+# where a DDL string costs a parse round-trip to the JVM per query
+_HITS_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("score", T.FloatType())]
+)
 
 
 def _ngram_keep(n_terms: int, n: int) -> list[int]:
@@ -1332,6 +1337,8 @@ class IndexSearcher:
         k: int = 10,
         search_after: tuple | None = None,
         prune: bool | None = None,
+        *,
+        try_driver: bool = True,
     ) -> DataFrame:
         """Top-k as a DataFrame (doc_id long, score float), ordered by
         (score desc, doc_id asc). prune=None (default) auto-enables
@@ -1340,7 +1347,9 @@ class IndexSearcher:
         which only pays off once the exact path would decode+shuffle more
         than PRUNE_MIN_POSTINGS postings (measured crossover; at 100-TB
         head-term df this is always on, at test scale always off).
-        Rank-identity is proven by the on/off equivalence tests either way."""
+        Rank-identity is proven by the on/off equivalence tests either way.
+        try_driver=False skips the driver-path attempt (search() passes it
+        after its own attempt declined)."""
         query = _normalize_ngram_phrase(query)
         if query.get("type") == "boost":
             # BoostQuery (clt/search/mod.rs:14): multiply scores, float32.
@@ -1349,7 +1358,7 @@ class IndexSearcher:
             b = F.lit(float(query["boost"])).cast("float")
             inner = self.search_df(query["query"], k, search_after, prune)
             return inner.select("doc_id", (F.col("score") * b).cast("float").alias("score"))
-        rows = self._driver_search_rows(query, k, search_after, prune)
+        rows = self._driver_search_rows(query, k, search_after, prune) if try_driver else None
         if rows is not None:
             if not rows:
                 return self._empty_result()
@@ -1374,11 +1383,7 @@ class IndexSearcher:
         all_terms = sorted(set(scoring) | set(mn_terms))
         idf_map = {t: np.float32(stats[t]["idf"]) for t in all_terms if t in stats}
         sim = self.sim
-        blocks = (
-            self.postings.filter(F.col("term").isin(all_terms))
-            .select("term", "n", "first_doc", "docs_bin", "tfs_bin", "dlq_bin")
-            .coalesce(1)
-        )
+        blocks = self._term_blocks(all_terms).coalesce(1)
         ms_l, ss_l, mn_l = list(must_set), list(should_set), list(mn_terms)
 
         def kern(batches, _idf=idf_map, _sim=sim, _ms=ms_l, _ss=ss_l, _mn=mn_l, _m=msm):
@@ -1409,7 +1414,7 @@ class IndexSearcher:
             docs, scores = combine_bool_arrays(arrs, _ms, _ss, _mn, _m, _idf, _sim)
             yield pd.DataFrame({"doc_id": docs, "score": scores})
 
-        return blocks.mapInPandas(kern, schema="doc_id long, score float")
+        return blocks.mapInPandas(kern, schema=_HITS_SCHEMA)
 
     def _driver_match(self, query: dict, prune) -> tuple | None:
         """Small-query driver execution core: when a term/bool query's
@@ -1488,6 +1493,10 @@ class IndexSearcher:
                     arrs = (fetched or {}).get(t)
                     cache[t] = arrs
                     if arrs is not None:
+                        # shared by every later query that hits the term:
+                        # an in-place write would corrupt their scores
+                        for a in arrs:
+                            a.flags.writeable = False
                         self._postings_lru_held += len(arrs[0])
             out = {}
             for t in terms:  # touch before evicting so this query's terms stay
@@ -1504,15 +1513,13 @@ class IndexSearcher:
             return out or None
         return self._collect_postings_uncached(terms, doc_id)
 
-    def _collect_postings_uncached(
-        self, terms: list[str], doc_id: int | None
-    ) -> dict | None:
-        from collections import defaultdict
-
-        # hot path: ONE pre-selected DataFrame + ONE expr-string filter.
-        # Each py4j call costs ~0.7 ms of socket round-trip; the naive
-        # isin(...).select(6 cols) chain spends ~15 ms per query building
-        # the plan before the job even starts (r4 p50 regression).
+    def _term_blocks(self, terms) -> DataFrame:
+        """The packed block rows of `terms` (term, n, first_doc, last_doc,
+        docs_bin, tfs_bin, dlq_bin): the driver path's collect and the
+        fused plan's scan. Hot path: ONE pre-selected DataFrame + ONE
+        expr-string filter. Each py4j call costs ~0.7 ms of socket
+        round-trip; the naive isin(...).select(6 cols) chain spends
+        ~15 ms per query building the plan before the job even starts."""
         if not hasattr(self, "_blocks_sel"):
             self._blocks_sel = self.postings.select(
                 "term", "n", "first_doc", "last_doc",
@@ -1522,11 +1529,17 @@ class IndexSearcher:
             t.isascii() and all(c.isalnum() or c in "_-." for c in t) for t in terms
         ):
             in_list = ",".join(f"'{t}'" for t in terms)
-            src = self._blocks_sel.filter(f"term IN ({in_list})")
-        else:
-            # terms outside the safe literal set: Column-based filter
-            # (slower plan build, injection-proof)
-            src = self._blocks_sel.filter(F.col("term").isin(list(terms)))
+            return self._blocks_sel.filter(f"term IN ({in_list})")
+        # terms outside the safe literal set: Column-based filter
+        # (slower plan build, injection-proof)
+        return self._blocks_sel.filter(F.col("term").isin(list(terms)))
+
+    def _collect_postings_uncached(
+        self, terms: list[str], doc_id: int | None
+    ) -> dict | None:
+        from collections import defaultdict
+
+        src = self._term_blocks(terms)
         if doc_id is not None:
             src = src.filter(
                 f"first_doc <= {int(doc_id)} AND last_doc >= {int(doc_id)}"
@@ -1969,14 +1982,17 @@ class IndexSearcher:
         """Top-k as [(doc_id, score_f32)] — TopDocs analog. Small queries
         short-circuit through the driver path without materializing a
         DataFrame at all (no local-collect job)."""
-        if query.get("type") in (
+        tried = query.get("type") in (
             "term", "bool", "synonym", "dismax", "blended", "phrase",
             "multi_phrase", "ngram_phrase", "fuzzy"
-        ) or query.get("type") in CONSTANT_SCORE_TYPES:
+        ) or query.get("type") in CONSTANT_SCORE_TYPES
+        if tried:
             rows = self._driver_search_rows(query, k, search_after, prune)
             if rows is not None:
                 return rows
-        rows = self.search_df(query, k, search_after, prune).collect()
+        # a declined driver attempt would decline again: don't repeat its
+        # term-stats lookup and checks inside search_df
+        rows = self.search_df(query, k, search_after, prune, try_driver=not tried).collect()
         return [(int(r["doc_id"]), float(np.float32(r["score"]))) for r in rows]
 
     def search_timed(

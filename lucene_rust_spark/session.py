@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import math
 import os
+import subprocess
 
+import numpy as np
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # literal-relation ceiling for local_rows_df: above this the SQL text and
@@ -29,15 +33,17 @@ def local_rows_df(spark: SparkSession, rows, cols):
         if v is None:
             return "NULL"
         if isinstance(v, str):
-            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+            # Spark's default parser reads backslash escapes in literals
+            return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
         if isinstance(v, bool):
             return "true" if v else "false"
-        if isinstance(v, float):
+        if isinstance(v, (float, np.floating)):
+            v = float(v)
+            if not math.isfinite(v):
+                # bare inf/nan would parse as column names
+                name = "NaN" if v != v else ("Infinity" if v > 0 else "-Infinity")
+                return f"CAST('{name}' AS DOUBLE)"
             return repr(v)  # shortest round-trip decimal: exact for f64
-        import numpy as _np
-
-        if isinstance(v, _np.floating):
-            return repr(float(v))
         return str(int(v))
 
     vals = ", ".join("(" + ", ".join(lit(v) for v in row) + ")" for row in rows)
@@ -45,6 +51,34 @@ def local_rows_df(spark: SparkSession, rows, cols):
         f"CAST(col{i + 1} AS {t}) AS {n}" for i, (n, t) in enumerate(cols)
     )
     return spark.sql(f"SELECT {casts} FROM VALUES {vals}")
+
+
+DAEMON_MODULE = "lucene_rust_spark.pydaemon"
+
+# Run by the interpreter Spark starts its workers with, from the driver's
+# cwd and PYTHONPATH. Exits 0 when that interpreter's zipimporter re-reads
+# its archive eagerly on invalidate_caches (CPython < 3.13 has no lazy
+# `_get_files`) and it finds the daemon module, without importing the package.
+_DAEMON_PROBE = """
+import importlib.util, os, sys, zipimport
+spec = importlib.util.find_spec("lucene_rust_spark")
+dirs = (spec.submodule_search_locations or []) if spec else []
+found = any(os.path.isfile(os.path.join(d, "pydaemon.py")) for d in dirs)
+sys.exit(0 if found and not hasattr(zipimport.zipimporter, "_get_files") else 1)
+"""
+
+
+def engine_daemon_usable() -> bool:
+    """Whether Spark's Python workers should fork from the engine's daemon
+    (pydaemon.py): it pays off on their interpreter and it loads there.
+    Otherwise PySpark's stock daemon stays, so no Python task can fail
+    for want of the module."""
+    python = os.environ.get("PYSPARK_PYTHON", "python3")  # SparkContext.pythonExec
+    try:
+        probe = subprocess.run([python, "-c", _DAEMON_PROBE], capture_output=True, timeout=60)
+    except (OSError, subprocess.SubprocessError):
+        return False
+    return probe.returncode == 0
 
 
 def get_spark(
@@ -55,8 +89,12 @@ def get_spark(
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(32, cores)
+    builder = SparkSession.builder
+    # a running context keeps its daemon: skip the probe
+    if SparkContext._active_spark_context is None and engine_daemon_usable():
+        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     return (
-        SparkSession.builder.master(f"local[{cores}]")
+        builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

@@ -632,3 +632,32 @@ def test_query_visitor(searcher):
     w = WithNot()
     visit_query(q, w)
     assert w.not_terms == {"batch"} and "merge" in w.terms
+
+
+def test_distributed_search_tries_driver_once(searcher, monkeypatch):
+    """search() declines the driver path once, then runs the distributed
+    plan without repeating the attempt; the result is unchanged."""
+    q = bool_query(should=["merge", "window", "value"])
+    expect = searcher.search(q, 10)  # driver path
+    calls = []
+    attempt = searcher._driver_search_rows
+
+    def counted(*args, **kwargs):
+        calls.append(args[0])
+        return attempt(*args, **kwargs)
+
+    monkeypatch.setattr(searcher, "_driver_search_rows", counted)
+    monkeypatch.setattr(searcher, "DRIVER_EXEC_MAX_POSTINGS", 0)
+    assert searcher.search(q, 10) == expect
+    assert calls == [q]
+
+
+def test_driver_postings_lru_arrays_are_read_only(searcher):
+    """The decoded-postings LRU hands the same arrays to every query that
+    hits a term: an in-place write must raise, not corrupt later scores."""
+    searcher.search(bool_query(should=["merge", "window"]), 10)
+    cached = searcher._postings_lru["merge"]
+    assert cached is not None
+    for arr in cached:
+        with pytest.raises(ValueError):
+            arr[0] += 1

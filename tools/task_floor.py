@@ -1,0 +1,71 @@
+"""One-task Spark floors under the engine's session: the median wall time
+of a 1-task JVM-only collect, rdd.map, mapInPandas and mapInArrow job.
+
+Usage:
+    python tools/task_floor.py [--reps 15] [--cores N] [--stock]
+
+--stock keeps PySpark's stock Python daemon, for an A/B against the
+engine's daemon (lucene_rust_spark/pydaemon.py) that get_spark selects.
+Each job is warmed first, then the four jobs are interleaved rep by rep.
+Run it from the repository root, so Spark's workers find the package.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import pathlib
+import statistics
+import sys
+import time
+
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
+
+
+def jobs(spark) -> dict:
+    sc = spark.sparkContext
+    one = spark.range(0, 1, 1, 1)
+    return {
+        "jvm_collect_ms": lambda: one.collect(),
+        "rdd_map_ms": lambda: sc.parallelize([1], 1).map(lambda x: x).collect(),
+        "map_in_pandas_ms": lambda: one.mapInPandas(lambda it: it, "id long").collect(),
+        "map_in_arrow_ms": lambda: one.mapInArrow(lambda it: it, "id long").collect(),
+    }
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--reps", type=int, default=15)
+    ap.add_argument("--cores", type=int, default=os.cpu_count() or 4)
+    ap.add_argument("--driver-memory", default="3g")
+    ap.add_argument("--stock", action="store_true", help="PySpark's stock daemon")
+    args = ap.parse_args()
+
+    from lucene_rust_spark import session
+
+    if args.stock:
+        session.engine_daemon_usable = lambda: False
+    spark = session.get_spark(app="task_floor", cores=args.cores, driver_memory=args.driver_memory)
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        run = jobs(spark)
+        for fn in run.values():  # start the workers, compile the paths
+            for _ in range(3):
+                fn()
+        samples: dict = {name: [] for name in run}
+        for _ in range(args.reps):
+            for name, fn in run.items():
+                t0 = time.perf_counter()
+                fn()
+                samples[name].append((time.perf_counter() - t0) * 1e3)
+        daemon = spark.sparkContext.getConf().get("spark.python.daemon.module", "pyspark.daemon")
+    finally:
+        spark.stop()
+    out = {name: round(statistics.median(xs), 1) for name, xs in samples.items()}
+    print(json.dumps({"daemon": daemon, "cores": args.cores, "reps": args.reps,
+                      "statistic": "median", **out}))
+
+
+if __name__ == "__main__":
+    main()
