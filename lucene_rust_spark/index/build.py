@@ -51,6 +51,33 @@ DOCMAP_TERM = "\x01docmap"  # sentinel rows carrying the doc map as an Arrow
 
 # --- docID assignment -------------------------------------------------------
 
+# the docID order keys besides content: the DWPT kernel lexsorts them as
+# object arrays, where a None cannot be ordered against a str
+META_COLUMNS = ("commit", "path", "repo")
+
+
+def reject_null_metadata(source: DataFrame) -> None:
+    """Raise ValueError naming a metadata column that holds a NULL, before
+    the build's jobs start (inside the DWPT task it would surface as a
+    TypeError from np.lexsort). Columns the schema declares non-nullable
+    need no look; the rest cost one limit-1 probe job, whose IS NULL
+    filter a parquet scan answers from row-group null counts."""
+    cols = [f.name for f in source.schema.fields if f.name in META_COLUMNS and f.nullable]
+    if not cols:
+        return
+    hit = (
+        source.filter(" OR ".join(f"`{c}` IS NULL" for c in cols))
+        .select(*[F.col(c).isNull().alias(c) for c in cols])
+        .limit(1)
+        .collect()
+    )
+    if hit:
+        col = next(c for c in cols if hit[0][c])
+        raise ValueError(
+            f"NULL in metadata column {col!r}: docIDs are ordered by "
+            f"{', '.join(META_COLUMNS)}, which must all be non-NULL"
+        )
+
 
 def with_partition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Deterministic partition key — pinned to match oracle.partition_of:
@@ -1133,6 +1160,7 @@ def build_index(
         raise ValueError("offsets=True requires positions=True")
     if payloads and not positions:
         raise ValueError("payloads require positions=True")
+    reject_null_metadata(spark.read.parquet(source) if isinstance(source, str) else source)
     t_start = time.time()
     # shuffle_width = physical task fan-out for the heavy stages; decoupled
     # from num_partitions (the logical segment count) so CPU-bound kernel

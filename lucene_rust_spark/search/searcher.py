@@ -12,15 +12,23 @@ Spark mapping:
   conjunction (leapfrog)      = groupBy(doc_id) match-count filter
   disjunction sum             = groupBy(doc_id) + fixed-order float32 sum
   MUST_NOT (ReqExclScorer)    = left_anti join
-  TopScoreDocCollector merge  = orderBy(score desc, doc_id asc).limit(k)
-                                (Spark's TakeOrderedAndProject IS the
-                                two-level heap merge)
+  TopScoreDocCollector merge  = fused one-task plan (<= FUSED_MAX_POSTINGS):
+                                top-k ranked inside its task, live docs
+                                and search_after applied there too;
+                                multi-task plans: orderBy(score desc,
+                                doc_id asc).limit(k) (Spark's
+                                TakeOrderedAndProject IS the two-level
+                                heap merge)
   search_after                = (score, doc_id) keyset predicate before top-k
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import os
+import uuid
+from collections import defaultdict
 
 import numpy as np
 import pandas as pd
@@ -37,6 +45,7 @@ from lucene_rust_spark.search.rewrite import (
     match_candidates,
     match_terms,
 )
+from lucene_rust_spark.session import sql_string
 
 _EMPTY_I64 = np.zeros(0, dtype=np.int64)
 
@@ -67,6 +76,8 @@ DRIVER_EXEC_MAX_POSTINGS = 1_000_000
 # score/combine/rank pipeline still runs per query). Bounded by postings
 # held; invalidated with the searcher view (refresh() rebuilds the reader)
 DRIVER_POSTINGS_CACHE_MAX = 4_000_000
+# open(cache=True) preloads the terms dict onto the driver up to this size
+TERM_DICT_MAX = 2_000_000
 # mapInPandas output schema of the fused plan: a StructType is sent as JSON,
 # where a DDL string costs a parse round-trip to the JVM per query
 _HITS_SCHEMA = T.StructType(
@@ -134,6 +145,71 @@ def combine_bool_arrays(
         ok = ok & (n_should >= max(msm, 0 if must_set else 1))
     ok = ok & (n_not == 0)
     return all_docs[ok], acc[ok]
+
+
+def _term_in(terms) -> str:
+    """The block scans' `term IN (...)` filter as one SQL string: one py4j
+    call, where isin(list) marshals each literal (~0.5 ms apiece)."""
+    return f"term IN ({', '.join(map(sql_string, terms))})"
+
+
+def _top_k(docs, scores, k, search_after):
+    """(docs, scores) after the search_after keyset, ranked (score desc,
+    doc_id asc) and cut to k: the TopScoreDocCollector order every
+    executor shares (float32 keyset compare, as Lucene's FieldDoc)."""
+    if search_after is not None and len(docs):
+        s_a, d_a = np.float32(search_after[0]), int(search_after[1])
+        keep = (scores < s_a) | ((scores == s_a) & (docs > d_a))
+        docs, scores = docs[keep], scores[keep]
+    order = np.lexsort((docs, -scores.astype(np.float64)))[:k]
+    return docs[order], scores[order]
+
+
+# the fused kernel's input: the packed block columns plus the query spec
+_FUSED_COLS = ("term", "n", "first_doc", "docs_bin", "tfs_bin", "dlq_bin", "spec")
+
+
+def _fused_kernel(batches, sim, tomb_ids):
+    """The fused one-task plan (decode -> combine_bool_arrays -> optional
+    live-docs filter -> optional top-k), shared by search_df's ranked
+    frame and hits_df's per-doc scores. The query travels as the JSON
+    `spec` column of the block rows (must, should, not, msm, float32 idf
+    per scoring term, k, after), so one cached UDF serves every query of
+    a searcher view; sim and the view's tombstone ids are bound once.
+    k=None yields every matching doc, unranked and before the live-docs
+    filter (hits_df's contract)."""
+    spec = None
+    chunks = defaultdict(list)
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        if spec is None:
+            spec = json.loads(pdf["spec"].iat[0])
+        ns = pdf["n"].to_numpy(np.int64)
+        docs_dec = K.for_unpack_batch(list(pdf["docs_bin"]), ns)
+        tfs_dec = K.for_unpack_batch(list(pdf["tfs_bin"]), ns)
+        for ri, (term, fd, qb) in enumerate(zip(pdf["term"], pdf["first_doc"], pdf["dlq_bin"])):
+            docs = np.int64(fd) + np.cumsum(docs_dec[ri]).astype(np.int64)
+            chunks[term].append(
+                (
+                    docs,
+                    tfs_dec[ri].astype(np.int64),
+                    np.frombuffer(bytes(qb), dtype=np.uint8).astype(np.int64),
+                )
+            )
+    if spec is None:
+        return
+    arrs = {t: tuple(np.concatenate(x) for x in zip(*lst)) for t, lst in chunks.items()}
+    idf = {t: np.float32(v) for t, v in spec["idf"].items()}
+    docs, scores = combine_bool_arrays(
+        arrs, spec["must"], spec["should"], spec["not"], spec["msm"], idf, sim
+    )
+    if spec["k"] is not None:
+        if tomb_ids is not None and len(docs):
+            live = ~np.isin(docs, tomb_ids)
+            docs, scores = docs[live], scores[live]
+        docs, scores = _top_k(docs, scores, spec["k"], spec["after"])
+    yield pd.DataFrame({"doc_id": docs, "score": scores})
 
 
 def phrase_doc_freq(pos_by_slot, slot_offs, slop: int, lucene_mode: bool):
@@ -293,15 +369,20 @@ class IndexSearcher:
         self.docmap = self._read_store(self.manifest.get("docmap_dir", "docmap"))
         self._term_dict = None
         self._norms_df = None
+        self._fused = None  # (temp view, kernel column): see _fused_udf
         if cache:
             self.postings = self.postings.persist()
             # terms dict fits the driver comfortably below ~2M entries:
             # preloading makes TermStates gather + MultiTermQuery expansion
             # collect-free (1 Spark job per query instead of 2-3). At larger
-            # dictionaries the DataFrame path below is used instead.
-            n_terms = self.terms.count()
-            if n_terms <= 2_000_000:
-                pdf = self.terms.select("term", "doc_freq", "total_term_freq").toPandas()
+            # dictionaries the DataFrame path below is used instead. One
+            # capped collect both decides and loads.
+            pdf = (
+                self.terms.select("term", "doc_freq", "total_term_freq")
+                .limit(TERM_DICT_MAX + 1)
+                .toPandas()
+            )
+            if len(pdf) <= TERM_DICT_MAX:
                 self._term_dict = {
                     t: (int(d), int(f))
                     for t, d, f in zip(pdf["term"], pdf["doc_freq"], pdf["total_term_freq"])
@@ -336,6 +417,7 @@ class IndexSearcher:
             self.postings.unpersist()
         except Exception:
             pass
+        self._drop_fused()  # rebuilt lazily over the new generation
         # stale driver-side caches: tombstones, pre-selected block frames,
         # and the decoded-postings LRU all reference the OLD generation
         for attr in ("_tomb_ids", "_blocks_sel", "_blocks_pos_sel",
@@ -391,6 +473,7 @@ class IndexSearcher:
                 pass
         self._scratch_dfs.clear()
         self._term_dict = None
+        self._drop_fused()
 
     def _scratch(self, df: DataFrame) -> None:
         """Track a persisted per-query intermediate; evict oldest beyond a
@@ -979,14 +1062,11 @@ class IndexSearcher:
                 "term", "n", "first_doc", "last_doc",
                 "docs_bin", "tfs_bin", "dlq_bin", "pos_bin",
             )
-        if all(
-            t.isascii() and all(c.isalnum() or c in "_-." for c in t) for t in terms
-        ):
-            in_list = ",".join(f"'{t}'" for t in terms)
-            src = self._blocks_pos_seek_sel.filter(f"term IN ({in_list})")
-        else:
-            src = self._blocks_pos_seek_sel.filter(F.col("term").isin(list(terms)))
-        rows = src.filter(f"first_doc <= {did} AND last_doc >= {did}").collect()
+        rows = (
+            self._blocks_pos_seek_sel.filter(_term_in(terms))
+            .filter(f"first_doc <= {did} AND last_doc >= {did}")
+            .collect()
+        )
         out: dict[str, np.ndarray] = {}
         dlq_out = 0
         for r in rows:
@@ -1369,52 +1449,59 @@ class IndexSearcher:
             return local_rows_df(
                 self.spark, rows, [("doc_id", "BIGINT"), ("score", "FLOAT")]
             )
-        hits = self.hits_df(query, k, search_after, prune)
+        if query.get("type") in ("term", "bool"):
+            hits, ranked = self._bool_hits(query, k, search_after, prune, rank=True)
+            if ranked:
+                return hits
+        else:
+            hits = self.hits_df(query, k, search_after, prune)
         return self._finish(hits, k, search_after)
 
-    def _fused_bool_hits(
-        self, scoring, must_set, should_set, mn_terms, msm, stats
-    ) -> DataFrame:
-        """One-task decode+combine plan for small distributed booleans:
-        a single mapInPandas over the (coalesced) block scan yields final
-        per-doc scores via combine_bool_arrays — identical semantics to
-        the driver path, as a Spark job (tombstones/search_after applied
-        by _finish as usual)."""
-        all_terms = sorted(set(scoring) | set(mn_terms))
-        idf_map = {t: np.float32(stats[t]["idf"]) for t in all_terms if t in stats}
-        sim = self.sim
-        blocks = self._term_blocks(all_terms).coalesce(1)
-        ms_l, ss_l, mn_l = list(must_set), list(should_set), list(mn_terms)
+    def _fused_hits(self, spec: dict) -> DataFrame:
+        """The fused one-task plan of one query: ONE SQL string (block
+        scan with `term IN (...)` and COALESCE(1), the spec as a literal
+        column), then mapInPandas with the view's cached _fused_kernel
+        column: 9 py4j calls with the collect. Each call costs ~0.5 ms and
+        each DataFrame step its own JVM analysis, so the plan is one
+        statement and the UDF is pickled once per view, not per query."""
+        view, kernel = self._fused_udf()
+        terms = sorted(set(spec["idf"]) | set(spec["not"]))
+        sql = (
+            "SELECT /*+ COALESCE(1) */ term, n, first_doc, docs_bin, tfs_bin, "
+            f"dlq_bin, {sql_string(json.dumps(spec))} AS spec FROM {view} "
+            f"WHERE {_term_in(terms)}"
+        )
+        # the JVM API directly: spark.sql() adds ~4 calls for its parameter
+        # array, and DataFrame.mapInPandas takes a function, not a column
+        jdf = self.spark._jsparkSession.sql(sql).mapInPandas(kernel._jc, False, None)
+        return DataFrame(jdf, self.spark)
 
-        def kern(batches, _idf=idf_map, _sim=sim, _ms=ms_l, _ss=ss_l, _mn=mn_l, _m=msm):
-            from collections import defaultdict
+    def _fused_udf(self) -> tuple:
+        """(temp view over the postings, UDF column of _fused_kernel) of
+        this searcher view: built on the first fused query, dropped by
+        close() and refresh(). Its column names stay unresolved, so one
+        column binds to every query's scan."""
+        if self._fused is None:
+            from pyspark.sql.functions import pandas_udf
+            from pyspark.util import PythonEvalType
 
-            chunks = defaultdict(list)
-            for pdf in batches:
-                ns = pdf["n"].to_numpy(np.int64)
-                docs_dec = K.for_unpack_batch(list(pdf["docs_bin"]), ns)
-                tfs_dec = K.for_unpack_batch(list(pdf["tfs_bin"]), ns)
-                for ri, (term, fd, qb) in enumerate(zip(
-                    pdf["term"], pdf["first_doc"], pdf["dlq_bin"]
-                )):
-                    docs = np.int64(fd) + np.cumsum(docs_dec[ri]).astype(np.int64)
-                    chunks[term].append(
-                        (
-                            docs,
-                            tfs_dec[ri].astype(np.int64),
-                            np.frombuffer(bytes(qb), dtype=np.uint8).astype(np.int64),
-                        )
-                    )
-            if not chunks:
-                return
-            arrs = {
-                t: tuple(np.concatenate(x) for x in zip(*lst))
-                for t, lst in chunks.items()
-            }
-            docs, scores = combine_bool_arrays(arrs, _ms, _ss, _mn, _m, _idf, _sim)
-            yield pd.DataFrame({"doc_id": docs, "score": scores})
+            tomb_ids = None  # only the ranked frame filters (see _bool_hits)
+            if self.tombstones is not None and self._driver_tomb_ready():
+                tomb_ids = self._tomb_ids
+            kernel = pandas_udf(
+                functools.partial(_fused_kernel, sim=self.sim, tomb_ids=tomb_ids),
+                returnType=_HITS_SCHEMA,
+                functionType=PythonEvalType.SQL_MAP_PANDAS_ITER_UDF,
+            )(*[F.col(c) for c in _FUSED_COLS])
+            view = f"lrs_blocks_{uuid.uuid4().hex}"
+            self.postings.createTempView(view)
+            self._fused = (view, kernel)
+        return self._fused
 
-        return blocks.mapInPandas(kern, schema=_HITS_SCHEMA)
+    def _drop_fused(self) -> None:
+        if self._fused is not None:
+            self.spark.catalog.dropTempView(self._fused[0])
+            self._fused = None
 
     def _driver_match(self, query: dict, prune) -> tuple | None:
         """Small-query driver execution core: when a term/bool query's
@@ -1525,14 +1612,7 @@ class IndexSearcher:
                 "term", "n", "first_doc", "last_doc",
                 "docs_bin", "tfs_bin", "dlq_bin",
             )
-        if all(
-            t.isascii() and all(c.isalnum() or c in "_-." for c in t) for t in terms
-        ):
-            in_list = ",".join(f"'{t}'" for t in terms)
-            return self._blocks_sel.filter(f"term IN ({in_list})")
-        # terms outside the safe literal set: Column-based filter
-        # (slower plan build, injection-proof)
-        return self._blocks_sel.filter(F.col("term").isin(list(terms)))
+        return self._blocks_sel.filter(_term_in(terms))
 
     def _collect_postings_uncached(
         self, terms: list[str], doc_id: int | None
@@ -1641,12 +1721,8 @@ class IndexSearcher:
 
     @staticmethod
     def _rank_rows(docs_f, scores_f, k, search_after) -> list:
-        if search_after is not None and len(docs_f):
-            s_a, d_a = np.float32(search_after[0]), int(search_after[1])
-            keep = (scores_f < s_a) | ((scores_f == s_a) & (docs_f > d_a))
-            docs_f, scores_f = docs_f[keep], scores_f[keep]
-        order = np.lexsort((docs_f, -scores_f.astype(np.float64)))[:k]
-        return [(int(docs_f[i]), float(np.float32(scores_f[i]))) for i in order]
+        docs_f, scores_f = _top_k(docs_f, scores_f, k, search_after)
+        return [(int(d), float(np.float32(s))) for d, s in zip(docs_f, scores_f)]
 
     def _driver_phrase_rows(self, query: dict, k, search_after) -> list | None:
         """Driver path for phrase / multi-phrase / sloppy queries: decode
@@ -1682,13 +1758,7 @@ class IndexSearcher:
             self._blocks_pos_sel = self.postings.select(
                 "term", "n", "first_doc", "docs_bin", "tfs_bin", "dlq_bin", "pos_bin"
             )
-        if all(
-            t.isascii() and all(c.isalnum() or c in "_-." for c in t) for t in uniq
-        ):
-            in_list = ",".join(f"'{t}'" for t in uniq)
-            rows = self._blocks_pos_sel.filter(f"term IN ({in_list})").collect()
-        else:
-            rows = self._blocks_pos_sel.filter(F.col("term").isin(uniq)).collect()
+        rows = self._blocks_pos_sel.filter(_term_in(uniq)).collect()
         # term -> {doc: positions array}; doc -> dlq
         term_pos: dict[str, dict] = {t: {} for t in uniq}
         doc_dlq: dict[int, int] = {}
@@ -1818,8 +1888,6 @@ class IndexSearcher:
         into a top-k. k/search_after/prune only steer the WAND pruning
         decision (a pruned frame is still exact for docs that can reach
         the top k). Field-sort collectors consume this directly."""
-        auto_prune = prune is None
-        prune = bool(prune)
         qt = query.get("type")
         if qt == "match_all":
             # MatchAllDocsQuery (clt/search/mod.rs:80)
@@ -1829,7 +1897,7 @@ class IndexSearcher:
             )
         if qt == "boost":
             b = F.lit(float(query["boost"])).cast("float")
-            inner = self.hits_df(query["query"], k, search_after, prune)
+            inner = self.hits_df(query["query"], k, search_after, bool(prune))
             return inner.select("doc_id", (F.col("score") * b).cast("float").alias("score"))
         if qt == "const_score":
             # ConstantScoreQuery (clt/search/mod.rs:24-26): matching doc set
@@ -1871,7 +1939,18 @@ class IndexSearcher:
             return self._synonym_hits(query)
         if qt in ("phrase", "multi_phrase", "ngram_phrase"):
             return self._phrase_hits(query)
+        return self._bool_hits(query, k, search_after, prune, rank=False)[0]
 
+    def _bool_hits(
+        self, query: dict, k, search_after, prune, rank: bool
+    ) -> tuple[DataFrame, bool]:
+        """(hits, ranked) for a term/bool query. rank=True lets the fused
+        plan return the final top-k itself (live-docs filter, search_after
+        and the (score desc, doc_id asc) order inside its one task), with
+        ranked=True; otherwise hits are hits_df's unsorted, pre-live-docs
+        scores and the caller applies _finish."""
+        auto_prune = prune is None
+        prune = bool(prune)
         must, should, must_not, msm = query_terms(query)
         n_clauses = len(must) + len(should) + len(must_not)
         if n_clauses > MAX_CLAUSE_COUNT:
@@ -1880,14 +1959,14 @@ class IndexSearcher:
         if msm > len(should_set):
             # minimumNumberShouldMatch exceeding the SHOULD clause count can
             # never be satisfied (Lucene BooleanWeight returns no matches)
-            return self._empty_result()
+            return self._empty_result(), True
         scoring = sorted(set(must_set) | set(should_set))
         stats = self.term_stats(scoring)
         if any(t not in stats for t in must_set):
-            return self._empty_result()
+            return self._empty_result(), True
         scoring = [t for t in scoring if t in stats]
         if not scoring:
-            return self._empty_result()
+            return self._empty_result(), True
         if auto_prune:
             prune = (
                 sum(stats[t]["doc_freq"] for t in scoring) >= self.PRUNE_MIN_POSTINGS
@@ -1904,8 +1983,25 @@ class IndexSearcher:
             # to one task anyway, so run decode AND the pinned combine in a
             # single mapInPandas — no groupBy exchange, no second stage
             # (the per-stage fixed cost dominated small distributed bools).
-            # The combine is the SAME function the driver path runs.
-            return self._fused_bool_hits(scoring, must_set, should_set, mn_terms, msm, stats)
+            # The combine is the SAME function the driver path runs. A
+            # ranked caller also gets the live-docs filter and the top-k
+            # from that task (no TakeOrderedAndProject) while the view's
+            # tombstones fit the driver; above that, _finish's anti-join.
+            rank = rank and self._driver_tomb_ready()
+            spec = {
+                "must": must_set,
+                "should": should_set,
+                "not": mn_terms,
+                "msm": msm,
+                "idf": {t: float(np.float32(stats[t]["idf"])) for t in scoring},
+                "k": int(k) if rank else None,
+                "after": (
+                    [float(np.float32(search_after[0])), int(search_after[1])]
+                    if rank and search_after is not None
+                    else None
+                ),
+            }
+            return self._fused_hits(spec), rank
 
         if (
             prune
@@ -1976,7 +2072,7 @@ class IndexSearcher:
                 "doc_id", _f32_fold(F.col("parts")).alias("score")
             )
 
-        return hits
+        return hits, False
 
     def search(self, query: dict, k: int = 10, search_after: tuple | None = None, prune: bool | None = None):
         """Top-k as [(doc_id, score_f32)] — TopDocs analog. Small queries

@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import atexit
 import math
 import os
+import shutil
+import socket
 import subprocess
+import tempfile
+import uuid
 
 import numpy as np
 from pyspark import SparkContext
@@ -13,6 +18,12 @@ from pyspark.sql import SparkSession
 # literal-relation ceiling for local_rows_df: above this the SQL text and
 # parse time outgrow the job they replace
 LOCAL_ROWS_MAX = 1024
+
+
+def sql_string(v: str) -> str:
+    """v as a Spark SQL string literal. Spark's default parser reads
+    backslash escapes in literals, so backslashes are doubled."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def local_rows_df(spark: SparkSession, rows, cols):
@@ -33,8 +44,7 @@ def local_rows_df(spark: SparkSession, rows, cols):
         if v is None:
             return "NULL"
         if isinstance(v, str):
-            # Spark's default parser reads backslash escapes in literals
-            return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
+            return sql_string(v)
         if isinstance(v, bool):
             return "true" if v else "false"
         if isinstance(v, (float, np.floating)):
@@ -81,6 +91,49 @@ def engine_daemon_usable() -> bool:
     return probe.returncode == 0
 
 
+# Spark refuses a longer `spark.python.unix.domain.socket.dir`: its socket
+# files `<dir>/.<uuid4>.sock` (43 more bytes) must fit AF_UNIX's 107-byte
+# sun_path. Counted here in bytes, which bounds the UTF-16 length Spark counts.
+SOCKET_DIR_MAX = 61
+
+
+def unix_socket_dir(candidates=None) -> str | None:
+    """A fresh private (0700) directory for the JVM<->Python worker
+    sockets, or None to keep loopback TCP.
+
+    Over TCP every Arrow-fed Python task stalls ~40 ms between its header
+    and its first batch (Nagle's algorithm meeting the delayed-ACK timer);
+    over a Unix socket the same wait is ~1 ms. The directory is made in the
+    first candidate (default: the temp dir, then /tmp) where its path fits
+    SOCKET_DIR_MAX and a socket can actually be bound. It is removed at
+    interpreter exit."""
+    if not hasattr(socket, "AF_UNIX"):
+        return None
+    if candidates is None:
+        candidates = (tempfile.gettempdir(), "/tmp")
+    for base in candidates:
+        longest = os.path.join(os.path.abspath(base), "lrs-" + "x" * 8)  # mkdtemp's 8
+        if len(os.fsencode(longest)) > SOCKET_DIR_MAX:
+            continue
+        try:
+            path = tempfile.mkdtemp(prefix="lrs-", dir=base)
+        except OSError:
+            continue
+        sock = os.path.join(path, f".{uuid.uuid4()}.sock")
+        probe = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
+        try:
+            probe.bind(sock)
+        except OSError:
+            shutil.rmtree(path, ignore_errors=True)
+            continue
+        finally:
+            probe.close()
+        os.unlink(sock)
+        atexit.register(shutil.rmtree, path, True)
+        return path
+    return None
+
+
 def get_spark(
     app: str = "lucene_rust_spark",
     cores: int | None = None,
@@ -90,9 +143,15 @@ def get_spark(
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(32, cores)
     builder = SparkSession.builder
-    # a running context keeps its daemon: skip the probe
-    if SparkContext._active_spark_context is None and engine_daemon_usable():
-        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
+    # a running context keeps its daemon and transport: skip the probes
+    if SparkContext._active_spark_context is None:
+        if engine_daemon_usable():
+            builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
+        sock_dir = unix_socket_dir()
+        if sock_dir is not None:
+            builder = builder.config(
+                "spark.python.unix.domain.socket.enabled", "true"
+            ).config("spark.python.unix.domain.socket.dir", sock_dir)
     return (
         builder.master(f"local[{cores}]")
         .appName(app)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from lucene_rust_spark.index.build import (
     PARTITION_SHIFT,
     _build_group,
+    reject_null_metadata,
     with_partition,
     write_terms_dict,
 )
@@ -47,6 +48,7 @@ def append_batch(
     offset = (epoch + 1) * EPOCH_PART_STRIDE
     if offset + num_partitions > MAX_PART:
         raise ValueError(f"epoch {epoch} exceeds the part-id namespace")
+    reject_null_metadata(source)
     docs = with_partition(source, num_partitions).withColumn(
         "part", (F.col("part") + F.lit(offset)).cast("int")
     )

@@ -7,6 +7,7 @@ import json
 import os
 
 import numpy as np
+import pytest
 
 
 def test_manifest_invariants(spark, t1_index):
@@ -418,3 +419,27 @@ def test_payloads_roundtrip_and_score(spark, tmp_path):
     assert set(sums.values()) == {1.0}
     avgs = {r["doc_id"]: r["score"] for r in s2.payload_score("alpha", "avg").collect()}
     assert set(avgs.values()) == {0.0}
+
+
+@pytest.mark.parametrize("col", ["repo", "path", "commit"])
+def test_null_metadata_rejected_up_front(spark, tmp_path, col):
+    """A NULL docID-order column is a clear ValueError naming it, raised
+    before the build writes anything (the DWPT kernel's lexsort would
+    fail inside a task with a TypeError). append_batch checks the same."""
+    from lucene_rust_spark.corpus import gen_corpus_pandas
+    from lucene_rust_spark.index.build import build_index
+    from lucene_rust_spark.streaming.incremental import append_batch
+
+    pdf = gen_corpus_pandas(40).drop(columns=["row_id"])
+    pdf[col] = pdf[col].astype(object)
+    pdf.loc[7, col] = None
+    src = spark.createDataFrame(pdf)
+    out = tmp_path / "idx"
+    with pytest.raises(ValueError, match=f"'{col}'"):
+        build_index(spark, src, str(out), num_partitions=2)
+    assert not out.exists()
+    if col == "repo":  # the append path runs the same check
+        good = spark.createDataFrame(pdf.dropna())
+        build_index(spark, good, str(out), num_partitions=2)
+        with pytest.raises(ValueError, match="'repo'"):
+            append_batch(spark, src, str(out), epoch=0, num_partitions=2)

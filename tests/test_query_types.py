@@ -120,31 +120,140 @@ def test_field_exists(spark, tmp_path):
     assert s2.count(q) == 19
 
 
-def test_fused_vs_shuffle_bool_plans(searcher, monkeypatch):
-    """The r4 fused one-task bool plan and the multi-task shuffle plan
-    (forced via FUSED_MAX_POSTINGS=0) must agree with the driver path
-    bit-for-bit — three implementations, one pinned combine."""
+def _seeded_bool_queries(searcher, seed: int, n: int) -> list:
+    """Seeded term/bool queries over the index vocabulary: term, OR,
+    AND, AND-NOT and min-should-match shapes, some with a SHOULD term
+    absent from the index."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    vocab = sorted(t for t, (df, _) in searcher._term_dict.items() if df >= 20)
+    pick = lambda m: [str(t) for t in rng.choice(vocab, m, replace=False)]  # noqa: E731
+    out = []
+    for i in range(n):
+        shape = i % 5
+        if shape == 0:
+            out.append(term_query(pick(1)[0]))
+        elif shape == 1:
+            out.append(bool_query(should=pick(int(rng.integers(2, 5)))))
+        elif shape == 2:
+            out.append(bool_query(must=pick(2)))
+        elif shape == 3:
+            a, b, c = pick(3)
+            out.append(bool_query(must=[a], should=[b], must_not=[c]))
+        else:
+            out.append(
+                bool_query(should=pick(2) + ["zzz_absent"], min_should_match=2)
+            )
+    return out
+
+
+def _three_paths(s, q, k, search_after, S, monkeypatch):
+    """(driver, fused top-k, shuffle) results of one search."""
+    s.DRIVER_EXEC_MAX_POSTINGS = 10**9
+    drv = s.search(q, k, search_after=search_after)
+    s.DRIVER_EXEC_MAX_POSTINGS = 0
+    fused = s.search(q, k, search_after=search_after)  # one task, ranked in it
+    monkeypatch.setattr(S, "FUSED_MAX_POSTINGS", 0)
+    shuf = s.search(q, k, search_after=search_after)  # decode + groupBy exchange
+    monkeypatch.setattr(S, "FUSED_MAX_POSTINGS", 1_000_000)
+    return drv, fused, shuf
+
+
+def _assert_paths_agree(s, queries, S, monkeypatch):
+    pages2 = 0
+    for i, q in enumerate(queries):
+        k = (3, 10)[i % 2]
+        drv, fused, shuf = _three_paths(s, q, k, None, S, monkeypatch)
+        assert drv == fused == shuf, (q, k)
+        if len(drv) == k:  # page 2, keyed by page 1's last (score, doc)
+            after = (drv[-1][1], drv[-1][0])
+            page2 = _three_paths(s, q, k, after, S, monkeypatch)
+            assert page2[0] == page2[1] == page2[2], (q, k, "page 2")
+            assert not set(page2[0]) & set(drv)
+            pages2 += bool(page2[0])
+    assert pages2 >= len(queries) // 2
+
+
+def test_fused_vs_shuffle_bool_plans(spark, searcher, t1_index, monkeypatch):
+    """The driver path, the fused one-task plan (top-k ranked inside its
+    task) and the multi-task shuffle plan (forced via FUSED_MAX_POSTINGS=0)
+    agree bit-for-bit on seeded term/bool queries, on search_after pages,
+    and under tombstones — with the live-docs filter inside the fused task
+    and, above the driver tombstone cap, through _finish's anti-join."""
     import lucene_rust_spark.search.searcher as S
+    from lucene_rust_spark.search.searcher import IndexSearcher
 
     queries = [
         term_query("token"),
         bool_query(should=["token", "value", "index"]),
         bool_query(must=["token", "index"], must_not=["merge_mut"]),
         bool_query(should=["token", "value", "index"], min_should_match=2),
-    ]
+    ] + _seeded_bool_queries(searcher, seed=6, n=8)
     saved = searcher.DRIVER_EXEC_MAX_POSTINGS
     try:
-        for q in queries:
-            searcher.DRIVER_EXEC_MAX_POSTINGS = 10**9
-            drv = searcher.search(q, 10)
-            searcher.DRIVER_EXEC_MAX_POSTINGS = 0
-            fused = searcher.search(q, 10)  # est <= FUSED_MAX -> one-task plan
+        _assert_paths_agree(searcher, queries, S, monkeypatch)
+        # hits_df (k=None): the same kernel, every match, unranked
+        searcher.DRIVER_EXEC_MAX_POSTINGS = 0
+        for q in queries[:4]:
+            fused = sorted(map(tuple, searcher.hits_df(q).collect()))
             monkeypatch.setattr(S, "FUSED_MAX_POSTINGS", 0)
-            shuf = searcher.search(q, 10)  # decode + groupBy exchange plan
+            shuf = sorted(map(tuple, searcher.hits_df(q).collect()))
             monkeypatch.setattr(S, "FUSED_MAX_POSTINGS", 1_000_000)
-            assert drv == fused == shuf, q
+            assert fused == shuf, q
     finally:
         searcher.DRIVER_EXEC_MAX_POSTINGS = saved
+
+    # deletes: tombstone every other doc of each query's driver top-10
+    dead = sorted({d for q in queries for d, _ in searcher.search(q, 10)[::2]})
+    tomb = spark.createDataFrame([(d,) for d in dead], "doc_id long")
+    out, _ = t1_index
+    deleted = IndexSearcher(spark, out, cache=True, tombstones=tomb)
+    try:
+        _assert_paths_agree(deleted, queries, S, monkeypatch)
+        expect = {}
+        for q in queries:
+            deleted.DRIVER_EXEC_MAX_POSTINGS = 10**9
+            expect[repr(q)] = deleted.search(q, 10)
+            assert not {d for d, _ in expect[repr(q)]} & set(dead), q
+    finally:
+        deleted.close()
+    # above the driver's tombstone cap: no driver path, and the fused plan
+    # hands its hits to _finish instead of ranking them in the task
+    many = IndexSearcher(spark, out, cache=True, tombstones=tomb)
+    many._tomb_count = 10**6
+    try:
+        for q in queries:
+            assert many.search(q, 10) == expect[repr(q)], q
+    finally:
+        many.close()
+
+
+def test_fused_query_py4j_budget(spark, searcher, monkeypatch):
+    """A forced-distributed term query and a 3-term bool query each build
+    and collect their fused plan in at most 12 py4j round trips (one SQL
+    string, the cached kernel column, the collect). Only this thread's
+    calls count: py4j's finalizer thread sends deletes for earlier
+    queries' objects at its own pace."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = type(client).send_command
+    me = threading.get_ident()
+    calls = []
+
+    def counted(self, command, *args, **kwargs):
+        if threading.get_ident() == me:
+            calls.append(command.split("\n", 2)[:2])
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(searcher, "DRIVER_EXEC_MAX_POSTINGS", 0)
+    searcher.search(term_query("value"), 10)  # builds the view's kernel column
+    monkeypatch.setattr(type(client), "send_command", counted)
+    for q in (term_query("token"), bool_query(should=["token", "value", "index"])):
+        calls.clear()
+        assert len(searcher.search(q, 10)) == 10
+        assert len(calls) <= 12, calls
 
 
 def test_term_vector_and_mlt(searcher, oracle_idx):

@@ -1,11 +1,17 @@
 """The engine's session: the PySpark daemon its workers fork from
-(lucene_rust_spark/pydaemon.py) and local_rows_df's SQL literals."""
+(lucene_rust_spark/pydaemon.py), the Unix-socket transport to them, and
+local_rows_df's SQL literals."""
 
 from __future__ import annotations
 
 import importlib
 import math
+import os
+import shutil
+import socket
+import stat
 import sys
+import tempfile
 import zipfile
 import zipimport
 
@@ -104,3 +110,62 @@ def test_local_rows_df_literals_round_trip(spark):
     x = [r["x"] for r in got]
     assert x[0] == math.inf and x[1] == -math.inf
     assert math.isnan(x[2]) and math.isnan(x[3]) and x[4] == 0.1
+
+
+def _fits(sock_dir: str) -> bool:
+    """Spark's limit on the directory, and AF_UNIX's on a socket in it."""
+    from lucene_rust_spark.session import SOCKET_DIR_MAX
+
+    sock = os.path.join(sock_dir, ".00000000-0000-0000-0000-000000000000.sock")
+    return len(sock_dir) <= SOCKET_DIR_MAX and len(os.fsencode(sock)) <= 107
+
+
+def test_unix_socket_dir_without_af_unix(monkeypatch):
+    from lucene_rust_spark.session import unix_socket_dir
+
+    monkeypatch.delattr(socket, "AF_UNIX")
+    assert unix_socket_dir() is None
+
+
+def test_unix_socket_dir_never_over_long(tmp_path, monkeypatch):
+    from lucene_rust_spark.session import unix_socket_dir
+
+    deep = tmp_path / ("d" * 40)  # past Spark's socket-dir limit
+    deep.mkdir()
+    assert unix_socket_dir([str(deep)]) is None  # TCP: nothing fits
+    short = tempfile.mkdtemp(prefix="s", dir="/tmp")
+    try:
+        got = unix_socket_dir([str(deep), short])  # falls through to short
+        assert got is not None and os.path.dirname(got) == short and _fits(got)
+    finally:
+        shutil.rmtree(short)
+    # a long TMPDIR (a benchmark's run directory) falls back to /tmp
+    monkeypatch.setattr(tempfile, "tempdir", str(deep))
+    got = unix_socket_dir()
+    try:
+        assert got is not None and os.path.dirname(got) == "/tmp" and _fits(got)
+    finally:
+        os.rmdir(got)
+
+
+def test_unix_socket_dir_default():
+    from lucene_rust_spark.session import unix_socket_dir
+
+    got = unix_socket_dir()
+    assert got is not None and _fits(got)
+    try:
+        st = os.stat(got)
+        assert stat.S_ISDIR(st.st_mode) and stat.S_IMODE(st.st_mode) == 0o700
+        assert os.listdir(got) == []  # the bind probe cleaned up after itself
+    finally:
+        os.rmdir(got)
+
+
+def test_python_tasks_run_over_unix_sockets(spark):
+    if not hasattr(socket, "AF_UNIX"):
+        pytest.skip("no AF_UNIX on this platform: get_spark keeps TCP")
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
+    assert _fits(conf.get("spark.python.unix.domain.socket.dir"))
+    got = spark.range(0, 3, 1, 1).mapInPandas(lambda it: it, "id long").collect()
+    assert [r["id"] for r in got] == [0, 1, 2]

@@ -59,16 +59,17 @@ def main() -> None:
 
     # r4: small bool/term queries compile to the FUSED one-task plan
     # (single MapInPandas over the pushed-filter scan, Coalesce 1, no
-    # exchange); the multi-task shuffle plan — what runs at 100x scale —
-    # is audited separately by forcing FUSED_MAX_POSTINGS = 0
+    # exchange; the top-k is ranked inside that task, so no
+    # TakeOrderedAndProject); the multi-task shuffle plan — what runs at
+    # 100x scale — is audited separately by forcing FUSED_MAX_POSTINGS = 0
     import lucene_rust_spark.search.searcher as S
 
     term_df = s.search_df({"type": "term", "term": "class_out"}, 10, prune=False)
     lines += check(
         plan_of(term_df),
-        "single-term BM25 top-10 (fused one-task plan)",
-        [r"PushedFilters: .*term.*", r"TakeOrderedAndProject", r"Coalesce 1", r"MapInPandas"],
-        [r"SortMergeJoin", r"CartesianProduct", r"Exchange"],
+        "single-term BM25 top-10 (fused one-task plan, ranked in the task)",
+        [r"PushedFilters: .*term.*", r"Coalesce 1", r"MapInPandas"],
+        [r"SortMergeJoin", r"CartesianProduct", r"Exchange", r"TakeOrdered"],
     )
 
     saved_fused = S.FUSED_MAX_POSTINGS

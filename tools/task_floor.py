@@ -2,10 +2,12 @@
 of a 1-task JVM-only collect, rdd.map, mapInPandas and mapInArrow job.
 
 Usage:
-    python tools/task_floor.py [--reps 15] [--cores N] [--stock]
+    python tools/task_floor.py [--reps 15] [--cores N] [--stock] [--tcp]
 
 --stock keeps PySpark's stock Python daemon, for an A/B against the
 engine's daemon (lucene_rust_spark/pydaemon.py) that get_spark selects.
+--tcp keeps loopback TCP between the JVM and the Python workers, for an
+A/B against the Unix-domain sockets that get_spark selects where it can.
 Each job is warmed first, then the four jobs are interleaved rep by rep.
 Run it from the repository root, so Spark's workers find the package.
 """
@@ -40,12 +42,15 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=os.cpu_count() or 4)
     ap.add_argument("--driver-memory", default="3g")
     ap.add_argument("--stock", action="store_true", help="PySpark's stock daemon")
+    ap.add_argument("--tcp", action="store_true", help="loopback TCP to the workers")
     args = ap.parse_args()
 
     from lucene_rust_spark import session
 
     if args.stock:
         session.engine_daemon_usable = lambda: False
+    if args.tcp:
+        session.unix_socket_dir = lambda candidates=None: None
     spark = session.get_spark(app="task_floor", cores=args.cores, driver_memory=args.driver_memory)
     spark.sparkContext.setLogLevel("ERROR")
     try:
@@ -59,11 +64,14 @@ def main() -> None:
                 t0 = time.perf_counter()
                 fn()
                 samples[name].append((time.perf_counter() - t0) * 1e3)
-        daemon = spark.sparkContext.getConf().get("spark.python.daemon.module", "pyspark.daemon")
+        conf = spark.sparkContext.getConf()
+        daemon = conf.get("spark.python.daemon.module", "pyspark.daemon")
+        unix = conf.get("spark.python.unix.domain.socket.enabled", "false") == "true"
     finally:
         spark.stop()
     out = {name: round(statistics.median(xs), 1) for name, xs in samples.items()}
-    print(json.dumps({"daemon": daemon, "cores": args.cores, "reps": args.reps,
+    print(json.dumps({"daemon": daemon, "transport": "unix" if unix else "tcp",
+                      "cores": args.cores, "reps": args.reps,
                       "statistic": "median", **out}))
 
 
