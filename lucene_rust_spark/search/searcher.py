@@ -8,13 +8,17 @@ Collector), :161 (TotalHitCountCollector), :167 (WANDScorer — see wand.py).
 Spark mapping:
   TermStates/CollectionStatistics gather = driver-side lookup on the tiny
     terms dict (broadcast-style), then constants captured in the decode kernel
-  per-leaf scorer             = mapInPandas block-decode + float32 BM25 kernel
+  per-leaf scorer             = block-decode + float32 BM25 kernel, in one
+                                task for queries <= FUSED_MAX_POSTINGS (the
+                                reader task: it reads the postings files
+                                itself, block_reader.py), else mapInPandas
   conjunction (leapfrog)      = groupBy(doc_id) match-count filter
   disjunction sum             = groupBy(doc_id) + fixed-order float32 sum
   MUST_NOT (ReqExclScorer)    = left_anti join
-  TopScoreDocCollector merge  = fused one-task plan (<= FUSED_MAX_POSTINGS):
-                                top-k ranked inside its task, live docs
-                                and search_after applied there too;
+  TopScoreDocCollector merge  = reader task (<= FUSED_MAX_POSTINGS): one
+                                Spark job of one task and no SQL plan; top-k
+                                ranked inside the task, live docs and
+                                search_after applied there too;
                                 multi-task plans: orderBy(score desc,
                                 doc_id asc).limit(k) (Spark's
                                 TakeOrderedAndProject IS the two-level
@@ -58,10 +62,12 @@ PRUNE_MIN_POSTINGS = 1_000_000  # WAND auto-on crossover (see search_df)
 # postings, so pruning pays much earlier: measured crossover ~600k postings
 # (BENCH/WAND_SORTED.md: speedup 1.13-2.07x at 800k-1.2M, prune ratio .996+)
 PRUNE_MIN_POSTINGS_SORTED = 600_000
-# fused one-task bool plan: below this posting volume, decode + the pinned
-# combine run inside ONE mapInPandas task (a single-stage Spark job — no
-# groupBy exchange); a 1M-posting decode is ~50 ms of numpy, far below the
-# ~100-150 ms cost of the extra exchange+stage it replaces
+# one-task term/bool shape: below this posting volume, decode + the pinned
+# combine (_fused_kernel) run inside ONE Python task — no groupBy exchange.
+# A ranked search runs it as the view's reader task (one RDD job that reads
+# the postings files itself, no SQL plan); hits_df as one mapInPandas. A
+# 1M-posting decode is ~50 ms of numpy, far below the ~100-150 ms cost of
+# the extra exchange+stage it replaces
 FUSED_MAX_POSTINGS = 1_000_000
 # small-query driver path (see search_df): execute on the driver when the
 # query's total posting volume fits this cap. The bound is a driver-memory
@@ -165,30 +171,27 @@ def _top_k(docs, scores, k, search_after):
     return docs[order], scores[order]
 
 
-# the fused kernel's input: the packed block columns plus the query spec
+# the fused DataFrame plan's input: the packed block columns plus the spec
 _FUSED_COLS = ("term", "n", "first_doc", "docs_bin", "tfs_bin", "dlq_bin", "spec")
 
 
-def _fused_kernel(batches, sim, tomb_ids):
-    """The fused one-task plan (decode -> combine_bool_arrays -> optional
-    live-docs filter -> optional top-k), shared by search_df's ranked
-    frame and hits_df's per-doc scores. The query travels as the JSON
-    `spec` column of the block rows (must, should, not, msm, float32 idf
-    per scoring term, k, after), so one cached UDF serves every query of
-    a searcher view; sim and the view's tombstone ids are bound once.
-    k=None yields every matching doc, unranked and before the live-docs
-    filter (hits_df's contract)."""
-    spec = None
+def _fused_kernel(frames, spec, sim, tomb_ids=None):
+    """The one-task term/bool scorer (decode -> combine_bool_arrays ->
+    live-docs filter -> top-k), shared by the reader task (search's top-k)
+    and the fused DataFrame plan (hits_df). frames: block-row frames
+    (term, n, first_doc, docs_bin, tfs_bin, dlq_bin columns: pandas, or
+    the reader's column lists). spec: must, should, not, msm, the float32
+    idf per scoring term, k and after. k=None returns every matching doc,
+    unranked and before the live-docs filter (hits_df's contract).
+    Returns (docs int64, scores float32)."""
     chunks = defaultdict(list)
-    for pdf in batches:
-        if not len(pdf):
+    for f in frames:
+        ns = np.asarray(f["n"], dtype=np.int64)
+        if not len(ns):
             continue
-        if spec is None:
-            spec = json.loads(pdf["spec"].iat[0])
-        ns = pdf["n"].to_numpy(np.int64)
-        docs_dec = K.for_unpack_batch(list(pdf["docs_bin"]), ns)
-        tfs_dec = K.for_unpack_batch(list(pdf["tfs_bin"]), ns)
-        for ri, (term, fd, qb) in enumerate(zip(pdf["term"], pdf["first_doc"], pdf["dlq_bin"])):
+        docs_dec = K.for_unpack_batch(list(f["docs_bin"]), ns)
+        tfs_dec = K.for_unpack_batch(list(f["tfs_bin"]), ns)
+        for ri, (term, fd, qb) in enumerate(zip(f["term"], f["first_doc"], f["dlq_bin"])):
             docs = np.int64(fd) + np.cumsum(docs_dec[ri]).astype(np.int64)
             chunks[term].append(
                 (
@@ -197,8 +200,8 @@ def _fused_kernel(batches, sim, tomb_ids):
                     np.frombuffer(bytes(qb), dtype=np.uint8).astype(np.int64),
                 )
             )
-    if spec is None:
-        return
+    if not chunks:
+        return _EMPTY_I64, np.zeros(0, dtype=np.float32)
     arrs = {t: tuple(np.concatenate(x) for x in zip(*lst)) for t, lst in chunks.items()}
     idf = {t: np.float32(v) for t, v in spec["idf"].items()}
     docs, scores = combine_bool_arrays(
@@ -209,7 +212,31 @@ def _fused_kernel(batches, sim, tomb_ids):
             live = ~np.isin(docs, tomb_ids)
             docs, scores = docs[live], scores[live]
         docs, scores = _top_k(docs, scores, spec["k"], spec["after"])
-    yield pd.DataFrame({"doc_id": docs, "score": scores})
+    return docs, scores
+
+
+def _fused_map(batches, sim):
+    """hits_df's mapInPandas body: the spec rides the block rows as the
+    JSON `spec` column, so one cached UDF serves every query of a view."""
+    frames = [pdf for pdf in batches if len(pdf)]
+    if frames:
+        spec = json.loads(frames[0]["spec"].iat[0])
+        docs, scores = _fused_kernel(frames, spec, sim)
+        yield pd.DataFrame({"doc_id": docs, "score": scores})
+
+
+def _reader_task(_split, specs, files, sim, tomb):
+    """The reader job's one task: per query spec, the blocks of its terms
+    from the view's postings files (block_reader), then _fused_kernel.
+    tomb: broadcast of the view's tombstone ids, or None. Consumes every
+    spec, so PySpark hands the worker back for reuse."""
+    from lucene_rust_spark.search.block_reader import term_blocks
+
+    tomb_ids = tomb.value if tomb is not None else None
+    for spec in specs:
+        blocks = term_blocks(files, set(spec["idf"]) | set(spec["not"]))
+        docs, scores = _fused_kernel([blocks.to_pydict()], spec, sim, tomb_ids)
+        yield docs.tolist(), scores.tolist()
 
 
 def phrase_doc_freq(pos_by_slot, slot_offs, slop: int, lucene_mode: bool):
@@ -370,6 +397,7 @@ class IndexSearcher:
         self._term_dict = None
         self._norms_df = None
         self._fused = None  # (temp view, kernel column): see _fused_udf
+        self._reader = None  # (OneTaskJob, tombstone broadcast): see _reader_job
         if cache:
             self.postings = self.postings.persist()
             # terms dict fits the driver comfortably below ~2M entries:
@@ -417,7 +445,7 @@ class IndexSearcher:
             self.postings.unpersist()
         except Exception:
             pass
-        self._drop_fused()  # rebuilt lazily over the new generation
+        self._drop_fused()  # both rebuilt lazily over the new generation
         # stale driver-side caches: tombstones, pre-selected block frames,
         # and the decoded-postings LRU all reference the OLD generation
         for attr in ("_tomb_ids", "_blocks_sel", "_blocks_pos_sel",
@@ -445,18 +473,22 @@ class IndexSearcher:
         path = os.path.join(self.index_dir, dirname)
         if not self.pin_files:
             return self.spark.read.parquet(path)
-        stamped = (self.manifest.get("store_files") or {}).get(dirname)
-        if stamped:
-            files = [os.path.join(self.index_dir, r) for r in stamped]
-            return self.spark.read.option("basePath", path).parquet(*files)
-        import glob as _glob
-
-        files = sorted(
-            _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        )
+        files = self._store_files(dirname)
         if not files:
             return self.spark.read.parquet(path)
         return self.spark.read.option("basePath", path).parquet(*files)
+
+    def _store_files(self, dirname: str) -> list[str]:
+        """One store dir's parquet files in this view: the manifest's
+        stamped `store_files`, else (legacy manifests) a glob."""
+        stamped = (self.manifest.get("store_files") or {}).get(dirname)
+        if stamped:
+            return [os.path.join(self.index_dir, r) for r in stamped]
+        import glob as _glob
+
+        return sorted(
+            _glob.glob(os.path.join(self.index_dir, dirname, "**", "*.parquet"), recursive=True)
+        )
 
     def close(self) -> None:
         """Release this reader's executor-memory footprint (persisted
@@ -1450,20 +1482,25 @@ class IndexSearcher:
                 self.spark, rows, [("doc_id", "BIGINT"), ("score", "FLOAT")]
             )
         if query.get("type") in ("term", "bool"):
-            hits, ranked = self._bool_hits(query, k, search_after, prune, rank=True)
-            if ranked:
-                return hits
-        else:
-            hits = self.hits_df(query, k, search_after, prune)
-        return self._finish(hits, k, search_after)
+            top = self._bool_top_k(query, k, search_after, prune)
+            if not isinstance(top, list):
+                return top
+            if not top:
+                return self._empty_result()
+            from lucene_rust_spark.session import local_rows_df
+
+            return local_rows_df(
+                self.spark, top, [("doc_id", "BIGINT"), ("score", "FLOAT")]
+            )
+        return self._finish(self.hits_df(query, k, search_after, prune), k, search_after)
 
     def _fused_hits(self, spec: dict) -> DataFrame:
-        """The fused one-task plan of one query: ONE SQL string (block
-        scan with `term IN (...)` and COALESCE(1), the spec as a literal
-        column), then mapInPandas with the view's cached _fused_kernel
-        column: 9 py4j calls with the collect. Each call costs ~0.5 ms and
-        each DataFrame step its own JVM analysis, so the plan is one
-        statement and the UDF is pickled once per view, not per query."""
+        """hits_df's fused one-task plan of one query: ONE SQL string
+        (block scan with `term IN (...)` and COALESCE(1), the spec as a
+        literal column), then mapInPandas with the view's cached
+        _fused_map column. Each py4j call costs ~0.5 ms and each DataFrame
+        step its own JVM analysis, so the plan is one statement and the
+        UDF is pickled once per view, not per query."""
         view, kernel = self._fused_udf()
         terms = sorted(set(spec["idf"]) | set(spec["not"]))
         sql = (
@@ -1477,19 +1514,16 @@ class IndexSearcher:
         return DataFrame(jdf, self.spark)
 
     def _fused_udf(self) -> tuple:
-        """(temp view over the postings, UDF column of _fused_kernel) of
-        this searcher view: built on the first fused query, dropped by
+        """(temp view over the postings, UDF column of _fused_map) of
+        this searcher view: built on the first fused hits_df, dropped by
         close() and refresh(). Its column names stay unresolved, so one
         column binds to every query's scan."""
         if self._fused is None:
             from pyspark.sql.functions import pandas_udf
             from pyspark.util import PythonEvalType
 
-            tomb_ids = None  # only the ranked frame filters (see _bool_hits)
-            if self.tombstones is not None and self._driver_tomb_ready():
-                tomb_ids = self._tomb_ids
             kernel = pandas_udf(
-                functools.partial(_fused_kernel, sim=self.sim, tomb_ids=tomb_ids),
+                functools.partial(_fused_map, sim=self.sim),
                 returnType=_HITS_SCHEMA,
                 functionType=PythonEvalType.SQL_MAP_PANDAS_ITER_UDF,
             )(*[F.col(c) for c in _FUSED_COLS])
@@ -1498,10 +1532,40 @@ class IndexSearcher:
             self._fused = (view, kernel)
         return self._fused
 
+    def _reader_job(self):
+        """The reader task of this searcher view as a OneTaskJob: built on
+        the first ranked distributed term/bool query, dropped by close()
+        and refresh(). It carries the view's postings files, the
+        similarity and the tombstone ids (a broadcast), so a query sends
+        only its spec. Call only once _driver_tomb_ready() holds."""
+        if self._reader is None:
+            from lucene_rust_spark.session import OneTaskJob
+
+            sc = self.spark.sparkContext
+            tomb = None
+            if self.tombstones is not None and len(self._tomb_ids):
+                tomb = sc.broadcast(self._tomb_ids)
+            # absolute: a worker's cwd need not be the driver's
+            files = [
+                os.path.abspath(f)
+                for f in self._store_files(self.manifest.get("postings_dir", "postings"))
+            ]
+            fn = functools.partial(_reader_task, files=files, sim=self.sim, tomb=tomb)
+            self._reader = (OneTaskJob(sc, fn), tomb)
+        return self._reader[0]
+
     def _drop_fused(self) -> None:
+        """Drop the view-bound fused plan pieces: hits_df's temp view and
+        UDF column, the reader job and its tombstone broadcast. The
+        workers' block cache keeps the files that did not change."""
         if self._fused is not None:
             self.spark.catalog.dropTempView(self._fused[0])
             self._fused = None
+        if self._reader is not None:
+            tomb = self._reader[1]
+            self._reader = None
+            if tomb is not None:
+                tomb.destroy()
 
     def _driver_match(self, query: dict, prune) -> tuple | None:
         """Small-query driver execution core: when a term/bool query's
@@ -1939,16 +2003,13 @@ class IndexSearcher:
             return self._synonym_hits(query)
         if qt in ("phrase", "multi_phrase", "ngram_phrase"):
             return self._phrase_hits(query)
-        return self._bool_hits(query, k, search_after, prune, rank=False)[0]
+        return self._bool_hits(query, k, search_after, prune)
 
-    def _bool_hits(
-        self, query: dict, k, search_after, prune, rank: bool
-    ) -> tuple[DataFrame, bool]:
-        """(hits, ranked) for a term/bool query. rank=True lets the fused
-        plan return the final top-k itself (live-docs filter, search_after
-        and the (score desc, doc_id asc) order inside its one task), with
-        ranked=True; otherwise hits are hits_df's unsorted, pre-live-docs
-        scores and the caller applies _finish."""
+    def _bool_plan(self, query: dict, prune) -> tuple | None:
+        """(spec, stats, prune) of a term/bool query, or None when no doc
+        can match. spec holds must, should, not (the MUST_NOT terms in the
+        index), msm and the float32 idf per scoring term; prune=None is
+        decided here from the scoring terms' posting volume."""
         auto_prune = prune is None
         prune = bool(prune)
         must, should, must_not, msm = query_terms(query)
@@ -1959,14 +2020,14 @@ class IndexSearcher:
         if msm > len(should_set):
             # minimumNumberShouldMatch exceeding the SHOULD clause count can
             # never be satisfied (Lucene BooleanWeight returns no matches)
-            return self._empty_result(), True
+            return None
         scoring = sorted(set(must_set) | set(should_set))
         stats = self.term_stats(scoring)
         if any(t not in stats for t in must_set):
-            return self._empty_result(), True
+            return None
         scoring = [t for t in scoring if t in stats]
         if not scoring:
-            return self._empty_result(), True
+            return None
         if auto_prune:
             prune = (
                 sum(stats[t]["doc_freq"] for t in scoring) >= self.PRUNE_MIN_POSTINGS
@@ -1976,37 +2037,64 @@ class IndexSearcher:
             mn_stats = self.term_stats(sorted(set(must_not)))
             mn_terms = sorted(t for t in set(must_not) if t in mn_stats)
             stats = {**stats, **mn_stats}
+        spec = {
+            "must": must_set,
+            "should": should_set,
+            "not": mn_terms,
+            "msm": msm,
+            "idf": {t: float(np.float32(stats[t]["idf"])) for t in scoring},
+        }
+        return spec, stats, prune
 
-        est = sum(stats[t]["doc_freq"] for t in set(scoring) | set(mn_terms))
-        if not prune and est <= FUSED_MAX_POSTINGS:
+    @staticmethod
+    def _fuses(plan: tuple) -> bool:
+        """The one-task shape runs the query (fused plan or reader task):
+        not pruned, and at most FUSED_MAX_POSTINGS postings to decode."""
+        spec, stats, prune = plan
+        est = sum(stats[t]["doc_freq"] for t in set(spec["idf"]) | set(spec["not"]))
+        return not prune and est <= FUSED_MAX_POSTINGS
+
+    def _bool_top_k(self, query: dict, k, search_after, prune) -> list | DataFrame:
+        """Top-k of a term/bool query, (score desc, doc_id asc). Where the
+        one-task shape runs and the view's tombstones fit the driver, the
+        view's reader task ranks it — one Spark job of one task, no SQL
+        plan — and this returns its [(doc_id, score)] rows. Otherwise it
+        returns the ranked DataFrame: _finish over _bool_hits."""
+        plan = self._bool_plan(query, prune)
+        if plan is None:
+            return []
+        if self._fuses(plan) and self._driver_tomb_ready():
+            after = None
+            if search_after is not None:
+                after = [float(np.float32(search_after[0])), int(search_after[1])]
+            docs, scores = self._reader_job()({**plan[0], "k": int(k), "after": after})
+            return list(zip(docs, scores))
+        hits = self._bool_hits(query, k, search_after, prune, plan)
+        return self._finish(hits, k, search_after)
+
+    def _bool_hits(self, query: dict, k, search_after, prune, plan=None) -> DataFrame:
+        """hits_df of a term/bool query: every match, unsorted and before
+        the live-docs filter. plan: _bool_plan's result, when the caller
+        already has it."""
+        plan = plan or self._bool_plan(query, prune)
+        if plan is None:
+            return self._empty_result()
+        spec, stats, prune = plan
+        if self._fuses(plan):
             # fused one-task plan (r4): at this volume the decode coalesces
             # to one task anyway, so run decode AND the pinned combine in a
             # single mapInPandas — no groupBy exchange, no second stage
             # (the per-stage fixed cost dominated small distributed bools).
-            # The combine is the SAME function the driver path runs. A
-            # ranked caller also gets the live-docs filter and the top-k
-            # from that task (no TakeOrderedAndProject) while the view's
-            # tombstones fit the driver; above that, _finish's anti-join.
-            rank = rank and self._driver_tomb_ready()
-            spec = {
-                "must": must_set,
-                "should": should_set,
-                "not": mn_terms,
-                "msm": msm,
-                "idf": {t: float(np.float32(stats[t]["idf"])) for t in scoring},
-                "k": int(k) if rank else None,
-                "after": (
-                    [float(np.float32(search_after[0])), int(search_after[1])]
-                    if rank and search_after is not None
-                    else None
-                ),
-            }
-            return self._fused_hits(spec), rank
+            # The combine is the SAME function the driver path runs.
+            return self._fused_hits({**spec, "k": None, "after": None})
+        must_set, should_set = spec["must"], spec["should"]
+        mn_terms, msm = spec["not"], spec["msm"]
+        scoring = sorted(spec["idf"])
 
         if (
             prune
             and isinstance(self.sim, BM25)
-            and not must_not
+            and not mn_terms
             and msm == 0
             and not must_set
             and search_after is None
@@ -2071,8 +2159,7 @@ class IndexSearcher:
             hits = grouped.filter(cond).select(
                 "doc_id", _f32_fold(F.col("parts")).alias("score")
             )
-
-        return hits, False
+        return hits
 
     def search(self, query: dict, k: int = 10, search_after: tuple | None = None, prune: bool | None = None):
         """Top-k as [(doc_id, score_f32)] — TopDocs analog. Small queries
@@ -2086,9 +2173,15 @@ class IndexSearcher:
             rows = self._driver_search_rows(query, k, search_after, prune)
             if rows is not None:
                 return rows
-        # a declined driver attempt would decline again: don't repeat its
-        # term-stats lookup and checks inside search_df
-        rows = self.search_df(query, k, search_after, prune, try_driver=not tried).collect()
+        if query.get("type") in ("term", "bool"):
+            top = self._bool_top_k(query, k, search_after, prune)
+            if isinstance(top, list):
+                return top  # the reader task's rows
+            rows = top.collect()
+        else:
+            # a declined driver attempt would decline again: don't repeat
+            # its term-stats lookup and checks inside search_df
+            rows = self.search_df(query, k, search_after, prune, try_driver=not tried).collect()
         return [(int(r["doc_id"]), float(np.float32(r["score"]))) for r in rows]
 
     def search_timed(

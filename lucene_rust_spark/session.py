@@ -63,6 +63,40 @@ def local_rows_df(spark: SparkSession, rows, cols):
     return spark.sql(f"SELECT {casts} FROM VALUES {vals}")
 
 
+class OneTaskJob:
+    """fn(split, payloads) bound once as the JVM's SimplePythonFunction;
+    each call runs it as one Spark job of one task, whose input is the
+    one pickled payload, and returns the first object the task yielded.
+    A call costs 6 py4j round trips and no SQL plan, where
+    RDD.parallelize(..).mapPartitions(..).collect() pickles the function
+    again each time (about 29 round trips). fn must drain its input:
+    PySpark retires a worker whose input was left unread, and the next
+    task forks a new one."""
+
+    def __init__(self, sc: SparkContext, fn):
+        from pyspark.core.rdd import _wrap_function
+        from pyspark.serializers import CPickleSerializer
+
+        self._sc = sc
+        self._ser = CPickleSerializer()
+        self._func = _wrap_function(sc, fn, self._ser, self._ser)
+        self._rdd = sc._jvm.PythonRDD
+        self._read = self._rdd.readRDDFromFile  # a static member: look it up once
+
+    def __call__(self, payload):
+        sc = self._sc
+        src = sc._serialize_to_jvm(
+            [payload],
+            self._ser,
+            lambda path: self._read(sc._jsc, path, 1),
+            lambda: sc._jvm.PythonParallelizeServer(sc._jsc.sc(), 1),
+        )
+        # one small pickled result: collect() hands it over py4j directly,
+        # where collectAndServe costs a socket and 4 calls for its address
+        out = self._rdd(src.rdd(), self._func, False, False).collect()
+        return self._ser.loads(out[0])
+
+
 DAEMON_MODULE = "lucene_rust_spark.pydaemon"
 
 # Run by the interpreter Spark starts its workers with, from the driver's

@@ -149,7 +149,7 @@ def _seeded_bool_queries(searcher, seed: int, n: int) -> list:
 
 
 def _three_paths(s, q, k, search_after, S, monkeypatch):
-    """(driver, fused top-k, shuffle) results of one search."""
+    """(driver, reader task, shuffle) results of one search."""
     s.DRIVER_EXEC_MAX_POSTINGS = 10**9
     drv = s.search(q, k, search_after=search_after)
     s.DRIVER_EXEC_MAX_POSTINGS = 0
@@ -175,14 +175,23 @@ def _assert_paths_agree(s, queries, S, monkeypatch):
     assert pages2 >= len(queries) // 2
 
 
-def test_fused_vs_shuffle_bool_plans(spark, searcher, t1_index, monkeypatch):
-    """The driver path, the fused one-task plan (top-k ranked inside its
-    task) and the multi-task shuffle plan (forced via FUSED_MAX_POSTINGS=0)
-    agree bit-for-bit on seeded term/bool queries, on search_after pages,
-    and under tombstones — with the live-docs filter inside the fused task
-    and, above the driver tombstone cap, through _finish's anti-join."""
+def test_fused_vs_shuffle_bool_plans(spark, searcher, t1_index, monkeypatch, tmp_path):
+    """The driver path, the reader task (one task that reads the postings
+    files and ranks the top-k) and the multi-task shuffle plan (forced via
+    FUSED_MAX_POSTINGS=0) agree bit-for-bit on seeded term/bool queries,
+    on search_after pages, and under tombstones — with the live-docs
+    filter inside the reader task and, above the driver tombstone cap,
+    through _finish's anti-join over the fused DataFrame plan. hits_df's
+    fused plan equals the shuffle plan. The same holds on views whose
+    files a fresh build does not have: several segment groups after an
+    append, a tiered merge with a passthrough segment, a past commit."""
+    import shutil
+
     import lucene_rust_spark.search.searcher as S
+    from lucene_rust_spark.corpus import gen_corpus_spark
+    from lucene_rust_spark.index.merge import merge_segments
     from lucene_rust_spark.search.searcher import IndexSearcher
+    from lucene_rust_spark.streaming.incremental import append_batch
 
     queries = [
         term_query("token"),
@@ -218,8 +227,8 @@ def test_fused_vs_shuffle_bool_plans(spark, searcher, t1_index, monkeypatch):
             assert not {d for d, _ in expect[repr(q)]} & set(dead), q
     finally:
         deleted.close()
-    # above the driver's tombstone cap: no driver path, and the fused plan
-    # hands its hits to _finish instead of ranking them in the task
+    # above the driver's tombstone cap: no driver path and no reader task;
+    # the fused DataFrame plan hands its hits to _finish's anti-join
     many = IndexSearcher(spark, out, cache=True, tombstones=tomb)
     many._tomb_count = 10**6
     try:
@@ -228,13 +237,37 @@ def test_fused_vs_shuffle_bool_plans(spark, searcher, t1_index, monkeypatch):
     finally:
         many.close()
 
+    # other file layouts, on a copy of the index: an appended segment
+    # group (a small one, so the tiered merge passes it through), the
+    # tiered merge, and the commit point from before the merge
+    copy = str(tmp_path / "t1_copy")
+    shutil.copytree(out, copy)
+    grown = IndexSearcher(spark, copy, cache=True)
+    try:
+        append_batch(spark, gen_corpus_spark(spark, 20, 1), copy, epoch=0, num_partitions=1)
+        assert grown.refresh()
+        appended = grown.manifest["generation"]
+        assert len({s_.get("group", 0) for s_ in grown.manifest["segments"]}) == 2
+        _assert_paths_agree(grown, queries, S, monkeypatch)
+        merge_segments(spark, copy, fan_in=4, policy="tiered")
+        assert grown.refresh()
+        _assert_paths_agree(grown, queries, S, monkeypatch)
+    finally:
+        grown.close()
+    past = IndexSearcher(spark, copy, cache=True, commit=appended)
+    try:
+        _assert_paths_agree(past, queries, S, monkeypatch)
+    finally:
+        past.close()
+
 
 def test_fused_query_py4j_budget(spark, searcher, monkeypatch):
-    """A forced-distributed term query and a 3-term bool query each build
-    and collect their fused plan in at most 12 py4j round trips (one SQL
-    string, the cached kernel column, the collect). Only this thread's
-    calls count: py4j's finalizer thread sends deletes for earlier
-    queries' objects at its own pace."""
+    """A forced-distributed term query and a 3-term bool query each run
+    their reader task in at most 12 py4j round trips: the spec's one-row
+    RDD, the PythonRDD over the view's bound function, its collect and
+    the one result element (6 measured). Only this thread's calls count:
+    py4j's finalizer thread sends deletes for earlier queries' objects at
+    its own pace."""
     import threading
 
     client = spark.sparkContext._gateway._gateway_client
@@ -248,7 +281,7 @@ def test_fused_query_py4j_budget(spark, searcher, monkeypatch):
         return send(self, command, *args, **kwargs)
 
     monkeypatch.setattr(searcher, "DRIVER_EXEC_MAX_POSTINGS", 0)
-    searcher.search(term_query("value"), 10)  # builds the view's kernel column
+    searcher.search(term_query("value"), 10)  # binds the view's reader task
     monkeypatch.setattr(type(client), "send_command", counted)
     for q in (term_query("token"), bool_query(should=["token", "value", "index"])):
         calls.clear()

@@ -57,17 +57,19 @@ def main() -> None:
         "stages the design calls for (decode kernels only).\n",
     ]
 
-    # r4: small bool/term queries compile to the FUSED one-task plan
+    # r4: small bool/term queries run in ONE task. A ranked search's top-k
+    # comes from the reader task, an RDD job with no SQL plan to audit;
+    # hits_df (every match, unranked) keeps the FUSED DataFrame plan
     # (single MapInPandas over the pushed-filter scan, Coalesce 1, no
-    # exchange; the top-k is ranked inside that task, so no
-    # TakeOrderedAndProject); the multi-task shuffle plan — what runs at
-    # 100x scale — is audited separately by forcing FUSED_MAX_POSTINGS = 0
+    # exchange, no TakeOrderedAndProject); the multi-task shuffle plan —
+    # what runs at 100x scale — is audited separately by forcing
+    # FUSED_MAX_POSTINGS = 0
     import lucene_rust_spark.search.searcher as S
 
-    term_df = s.search_df({"type": "term", "term": "class_out"}, 10, prune=False)
+    term_df = s.hits_df({"type": "term", "term": "class_out"}, 10, prune=False)
     lines += check(
         plan_of(term_df),
-        "single-term BM25 top-10 (fused one-task plan, ranked in the task)",
+        "single-term hits_df (fused one-task plan)",
         [r"PushedFilters: .*term.*", r"Coalesce 1", r"MapInPandas"],
         [r"SortMergeJoin", r"CartesianProduct", r"Exchange", r"TakeOrdered"],
     )

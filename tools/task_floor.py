@@ -1,5 +1,8 @@
 """One-task Spark floors under the engine's session: the median wall time
-of a 1-task JVM-only collect, rdd.map, mapInPandas and mapInArrow job.
+of a 1-task JVM-only collect, rdd.map, reader-task, mapInPandas and
+mapInArrow job. The reader-task row is the shape of a ranked distributed
+term/bool query: a function bound once (session.OneTaskJob) and a
+query-spec payload per job, here with no index to read.
 
 Usage:
     python tools/task_floor.py [--reps 15] [--cores N] [--stock] [--tcp]
@@ -8,7 +11,7 @@ Usage:
 engine's daemon (lucene_rust_spark/pydaemon.py) that get_spark selects.
 --tcp keeps loopback TCP between the JVM and the Python workers, for an
 A/B against the Unix-domain sockets that get_spark selects where it can.
-Each job is warmed first, then the four jobs are interleaved rep by rep.
+Each job is warmed first, then the five jobs are interleaved rep by rep.
 Run it from the repository root, so Spark's workers find the package.
 """
 
@@ -25,12 +28,25 @@ import time
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 
+SPEC = {"must": [], "should": ["alpha", "beta"], "not": [], "msm": 0,
+        "idf": {"alpha": 1.5, "beta": 0.75}, "k": 10, "after": None}
+
+
+def echo(_split, specs):
+    for spec in specs:  # drain the input, as the reader task does
+        yield [], []
+
+
 def jobs(spark) -> dict:
+    from lucene_rust_spark.session import OneTaskJob
+
     sc = spark.sparkContext
     one = spark.range(0, 1, 1, 1)
+    reader = OneTaskJob(sc, echo)
     return {
         "jvm_collect_ms": lambda: one.collect(),
         "rdd_map_ms": lambda: sc.parallelize([1], 1).map(lambda x: x).collect(),
+        "reader_task_ms": lambda: reader(SPEC),
         "map_in_pandas_ms": lambda: one.mapInPandas(lambda it: it, "id long").collect(),
         "map_in_arrow_ms": lambda: one.mapInArrow(lambda it: it, "id long").collect(),
     }
