@@ -28,7 +28,12 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from lucene_rust_spark.index.build import PARTITION_SHIFT, write_terms_dict
+from lucene_rust_spark.index.build import (
+    PARTITION_SHIFT,
+    block_term_stats,
+    sum_term_partials,
+    write_terms_dict,
+)
 from lucene_rust_spark.index.manifest import commit_manifest, read_manifest
 from lucene_rust_spark.streaming.incremental import EPOCH_PART_STRIDE, MAX_PART
 
@@ -130,41 +135,14 @@ def add_indexes(spark: SparkSession, dest_dir: str, src_dir: str) -> dict:
         glob.glob(os.path.join(src_dir, "terms_partial", "group=*"))
     )
     if src_partials:
-        agg_src = spark.read.parquet(*src_partials).groupBy("term").agg(
-            F.sum("doc_freq").cast("long").alias("doc_freq"),
-            F.sum("total_term_freq").cast("long").alias("total_term_freq"),
-            F.sum("n_blocks").cast("long").alias("n_blocks"),
-        )
-    else:  # legacy source without partials: derive from its postings
-        agg_src = (
-            spark.read.parquet(src_store("postings_dir", "postings"))
-            .groupBy("term")
-            .agg(
-                F.sum("n").cast("long").alias("doc_freq"),
-                F.sum("sum_tf").cast("long").alias("total_term_freq"),
-                F.count("*").cast("long").alias("n_blocks"),
-            )
-        )
+        agg_src = sum_term_partials(spark, src_partials)
+    else:  # a source whose reclaiming merge predates its one partial
+        agg_src = block_term_stats(spark.read.parquet(src_store("postings_dir", "postings")))
     agg_src.write.mode("overwrite").parquet(
         os.path.join(dest_dir, "terms_partial", f"group={gimp}")
     )
     partial_dirs = sorted(glob.glob(os.path.join(dest_dir, "terms_partial", "group=*")))
-    if partial_dirs:
-        agg = spark.read.parquet(*partial_dirs).groupBy("term").agg(
-            F.sum("doc_freq").cast("long").alias("doc_freq"),
-            F.sum("total_term_freq").cast("long").alias("total_term_freq"),
-            F.sum("n_blocks").cast("long").alias("n_blocks"),
-        )
-    else:  # legacy dest: derive the union from the (now-combined) postings
-        agg = (
-            spark.read.parquet(dest_store("postings_dir", "postings"))
-            .groupBy("term")
-            .agg(
-                F.sum("n").cast("long").alias("doc_freq"),
-                F.sum("sum_tf").cast("long").alias("total_term_freq"),
-                F.count("*").cast("long").alias("n_blocks"),
-            )
-        )
+    agg = sum_term_partials(spark, partial_dirs)  # holds the import just written
     width = spark.sparkContext.defaultParallelism
     terms_dir = f"terms_g{gen}"
     write_terms_dict(agg, os.path.join(dest_dir, terms_dir), max(1, width // 8))

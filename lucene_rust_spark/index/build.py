@@ -35,8 +35,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from lucene_rust_spark.functions import kernels as K
 from lucene_rust_spark.functions.analysis import tokenize_series, tokenize_spans_series
@@ -93,60 +91,12 @@ def with_partition(df: DataFrame, num_partitions: int) -> DataFrame:
     return df.withColumn("part", part)
 
 
-def assign_doc_ids(df_with_part: DataFrame, sort_key: str | None = None) -> DataFrame:
-    """doc_id = (part << 40) | row_number within part, rows sorted by
-    (repo, path, commit) — the IndexSorter + per-segment docBase analog
-    (clt/index/index_sorter.rs, clt/index/leaf_reader_context.rs).
-    Never monotonically_increasing_id(): must be rerun-deterministic.
-
-    sort_key (IndexWriterConfig.setIndexSort analog): an optional leading
-    SQL-expression sort key — 'content_len' orders docs by content length
-    ascending WITHIN each segment before docID assignment, clustering
-    short (high-BM25-score) docs into the low-doc_id FOR blocks of every
-    posting list. That makes the per-block competitive impacts
-    DISCRIMINATIVE, which is what lets block-max WAND prune (BENCH/
-    WAND.md: on hash-random doc order every block contains a
-    near-upper-bound posting and prune ratio is 0). (repo, path, commit)
-    stays as the tiebreak so assignment remains a pure function of the
-    corpus."""
-    if sort_key is None:
-        order = ["repo", "path", "commit"]
-    elif sort_key == "content_len":
-        order = [F.length("content").asc(), "repo", "path", "commit"]
-    else:
-        raise ValueError(f"unknown sort_key {sort_key!r} (supported: 'content_len')")
-    w = Window.partitionBy("part").orderBy(*order)
-    return df_with_part.withColumn(
-        "doc_id",
-        (F.col("part").cast("long") * F.lit(1 << PARTITION_SHIFT))
-        + (F.row_number().over(w) - F.lit(1)).cast("long"),
-    )
-
-
-# --- tokenize + per-doc term counts (TermsHash analog) ----------------------
-
-_FLAT_SCHEMA = "doc_id long, seg int, dl int, dlq int, term string, tf int"
-
-
-def dlq_sql(col: str = "dl") -> str:
-    """SmallFloat intToByte4 as a pure JVM SQL expression (bit_length via
-    length(bin(v))) — validated equal to kernels.int_to_byte4 over 0..3M."""
-    n = K.NUM_FREE_VALUES
-    v = f"({col} - {n})"
-    return f"""
-CASE WHEN {col} < {n} THEN {col}
-ELSE {n} + (
-  CASE WHEN length(bin({v})) < 4 OR {v} = 0 THEN {v}
-  ELSE (shiftright({v}, length(bin({v})) - 4) & 7)
-       | ((length(bin({v})) - 4 + 1) << 3)
-  END)
-END"""
-
+# --- SmallFloat norm decode as SQL -------------------------------------------
 
 def dl_decode_sql(col: str = "dlq") -> str:
-    """SmallFloat byte4ToInt as a pure SQL expression (inverse of dlq_sql)
-    — shared shape with the DuckDB oracle so quantized-norm scores are
-    recomputable exactly on both sides."""
+    """SmallFloat byte4ToInt as a pure SQL expression (inverse of
+    kernels.int_to_byte4) — shared shape with the DuckDB oracle so
+    quantized-norm scores are recomputable exactly on both sides."""
     n = K.NUM_FREE_VALUES
     e = f"({col} - {n})"
     return f"""
@@ -154,64 +104,6 @@ CASE WHEN {col} < {n} THEN {col}
 ELSE {n} + (CASE WHEN {e} < 8 THEN {e} & 15
             ELSE shiftleft(({e} & 7) | 8, shiftright({e}, 3) - 1) END)
 END"""
-
-
-def flat_postings_jvm(d: DataFrame) -> DataFrame:
-    """Tokenize + per-doc term count entirely JVM-side (whole-stage codegen;
-    the preferred path — UDFs are the slow path). Tokenizer: lower, split
-    on (?U)\\W+ (unicode word runs), drop empties and tokens > 255 chars —
-    same pinned analyzer spec as functions/analysis.py (FIXTURES.md §2);
-    rank-identity tests prove equivalence with the Python oracle."""
-    # order pinned to the oracle: split FIRST, lowercase per token (lowering
-    # the whole string first can change \W boundaries for non-ASCII); the
-    # remaining deviation is the regex class itself ((?U)\W vs Python \w on
-    # combining marks), proven equivalent on the test corpora by the
-    # rank-identity suite and documented in FIXTURES.md §2
-    toks = d.select(
-        "doc_id",
-        "part",
-        F.explode(F.split("content", r"(?U)\W+")).alias("raw"),
-    ).filter((F.col("raw") != "") & (F.length("raw") <= 255))
-    toks = toks.select("doc_id", "part", F.lower("raw").alias("term"))
-    flat = toks.groupBy("doc_id", "part", "term").agg(F.count("*").cast("int").alias("tf"))
-    w_doc = Window.partitionBy("doc_id")
-    return flat.select(
-        "doc_id",
-        F.col("part").alias("seg"),
-        F.sum("tf").over(w_doc).cast("int").alias("dl"),
-        "term",
-        "tf",
-    ).withColumn("dlq", F.expr(dlq_sql("dl")).cast("int"))
-
-
-def _flatten_postings(batches):
-    """mapInPandas kernel: (doc_id, part, content) → flat posting rows
-    (doc_id, seg, dlq, term, tf). Per-doc term counting here is the
-    map-side partial aggregate (TermsHash/FreqProxTermsWriter,
-    clt/index/mod.rs:57-59): the shuffle carries one row per distinct
-    (doc, term), not per token occurrence. Output is flat primitive
-    columns — nested Arrow types never cross the JVM boundary (they
-    dominated build cost when they did)."""
-    from collections import Counter
-    from itertools import chain
-
-    for pdf in batches:
-        toks = tokenize_series(pdf["content"])
-        counters = [sorted(Counter(ts).items()) for ts in toks]
-        lens = np.fromiter((len(c) for c in counters), dtype=np.int64, count=len(counters))
-        dl = np.fromiter((len(ts) for ts in toks), dtype=np.int64, count=len(toks))
-        dlq = K.int_to_byte4(dl).astype(np.int32)
-        flat = list(chain.from_iterable(counters))
-        yield pd.DataFrame(
-            {
-                "doc_id": np.repeat(pdf["doc_id"].to_numpy(np.int64), lens),
-                "seg": np.repeat(pdf["part"].to_numpy(np.int32), lens),
-                "dl": np.repeat(dl.astype(np.int32), lens),
-                "dlq": np.repeat(dlq, lens),
-                "term": [t for t, _ in flat],
-                "tf": np.fromiter((tf for _, tf in flat), dtype=np.int32, count=len(flat)),
-            }
-        )
 
 
 # --- posting block packing (FOR blocks of 128; for_util.rs:1) ----------------
@@ -403,48 +295,6 @@ def _pack_runs(
             "imp_dlq": [i[1] for i in impacts],
         }
     )
-
-
-def _pack_partition(batches):
-    """mapInPandas kernel: the input partition is sorted by
-    (term, seg, doc_id), so (term, seg) posting lists are contiguous runs.
-    Stream batches, carry the possibly-split tail run across batch
-    boundaries, pack complete runs vectorized (_pack_runs)."""
-    pend = None  # columns of the unfinished tail run
-
-    def split_tail(term_arr, seg_arr, docs, tfs, dlqs):
-        """Return (complete part, tail run) — tail may continue next batch."""
-        n = len(term_arr)
-        last_t, last_s = term_arr[n - 1], seg_arr[n - 1]
-        same = (term_arr == last_t) & (seg_arr == last_s)
-        # runs are contiguous: tail start = first index of the final run
-        tail_start = n - int(same[::-1].argmin()) if not same.all() else 0
-        if same.all():
-            tail_start = 0
-        return tail_start
-
-    for pdf in batches:
-        cols = (
-            pdf["term"].to_numpy(),
-            pdf["seg"].to_numpy(np.int64),
-            pdf["doc_id"].to_numpy(np.int64),
-            pdf["tf"].to_numpy(np.int64),
-            pdf["dlq"].to_numpy(np.int64),
-        )
-        if pend is not None:
-            cols = tuple(np.concatenate((a, b)) for a, b in zip(pend, cols))
-            pend = None
-        ts = split_tail(*cols)
-        pend = tuple(c[ts:] for c in cols)
-        out = _pack_runs(*(c[:ts] for c in cols))
-        if out is not None and len(out):
-            yield out
-    if pend is not None and len(pend[0]):
-        out = _pack_runs(*pend)
-        if out is not None and len(out):
-            yield out
-
-
 
 
 # --- ASCII fast path: tokenize without Python string objects ----------------
@@ -656,9 +506,11 @@ def _count_batch(
 
 
 def _utf16_len_arrow(arr) -> np.ndarray:
-    """Per-string UTF-16 code-unit counts of a pa.StringArray — exactly
-    Spark's length(string) (JVM chars): codepoints + one extra per
-    supplementary char, computed from the UTF-8 buffer."""
+    """Per-string UTF-16 code-unit counts of a pa.StringArray (JVM chars,
+    the pinned content_len unit, FIXTURES.md §1): codepoints + one extra
+    per supplementary char, computed from the UTF-8 buffer. Spark's
+    length() counts codepoints instead, so the two differ on astral
+    text."""
     ndocs = len(arr)
     offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)
     offs = offs[arr.offset : arr.offset + ndocs + 1].astype(np.int64)
@@ -694,8 +546,8 @@ def _sha256_arrow(arr) -> np.ndarray:
     return out
 
 
-def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filters=None, pfor=False, word_break="simple", offsets: bool = False, payload_fn=None, assign=None):
-    """mapInPandas kernel — the DocumentsWriterPerThread analog
+def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filters=None, pfor=False, word_break="simple", offsets: bool = False, payload_fn=None, sort_key=None):
+    """mapInArrow kernel — the DocumentsWriterPerThread analog
     (clt/index/mod.rs:33): this task holds complete segments (docs are
     hash-routed by part), accumulates per-doc term counts across Arrow
     batches, then sorts (term, seg, doc_id) ONCE in numpy and emits
@@ -708,17 +560,16 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
     one content pass produces postings AND norms, instead of a second
     full-corpus tokenize just to count tokens.
 
-    assign={'sort_key': ...} (r7): docIDs are assigned HERE instead of by
-    a JVM window over full content rows — the task holds complete
-    segments, so the per-part rank is local. Rows arrive with metadata
-    columns but no doc_id; pairs are counted against task-local row ids
-    and remapped once the task's ordering (the oracle's canonical
-    (part[, content_len], repo, path, commit) — Python string order ==
-    Spark's UTF8_BINARY, content_len computed as UTF-16 units) is known.
-    The doc map (doc_id, repo, path, commit, lang, content_sha256) leaves
-    the task as one DOCMAP_TERM sentinel row holding an Arrow IPC blob,
-    so ONE content pass and ONE (unsorted) content shuffle produce
-    postings + norms + docmap."""
+    docIDs are assigned HERE: the task holds complete segments, so the
+    per-part rank is local. RecordBatches arrive with (part, repo, path,
+    commit, lang, content[, content_sha256]) and no doc_id; pairs are
+    counted against task-local row ids and remapped once the task's
+    ordering (the oracle's canonical (part[, content_len], repo, path,
+    commit) — Python string order == Spark's UTF8_BINARY, content_len in
+    UTF-16 code units) is known. The doc map (doc_id, repo, path, commit,
+    lang, content_sha256) leaves the task as one DOCMAP_TERM sentinel row
+    holding an Arrow IPC blob, so ONE content pass and ONE (unsorted)
+    content shuffle produce postings + norms + docmap."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -731,7 +582,6 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
     row_base = 0
     meta_repo, meta_path, meta_commit, meta_lang = [], [], [], []
     meta_sha, meta_clen = [], []
-    sort_key = (assign or {}).get("sort_key")
     # analyzer options the byte-LUT fast path can express (ASCII checked per
     # batch below); anything else routes through the regex path unchanged
     fast_ok = (
@@ -741,79 +591,38 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
         and not offsets
         and payload_fn is None
     )
-    for pdf in batches:
-        if isinstance(pdf, pa.RecordBatch):
-            nrows = pdf.num_rows
-            if assign is not None:
-                b_doc_ids = np.arange(row_base, row_base + nrows, dtype=np.int64)
-                row_base += nrows
-            else:
-                b_doc_ids = pdf.column("doc_id").to_numpy()
-            b_parts = pdf.column("part").to_numpy().astype(np.int64)
-            carr = pdf.column("content")
-            if assign is not None:
-                meta_repo.append(pdf.column("repo").to_numpy(zero_copy_only=False))
-                meta_path.append(pdf.column("path").to_numpy(zero_copy_only=False))
-                meta_commit.append(pdf.column("commit").to_numpy(zero_copy_only=False))
-                meta_lang.append(pdf.column("lang").to_numpy(zero_copy_only=False))
-                if "content_sha256" in pdf.schema.names:
-                    meta_sha.append(pdf.column("content_sha256").to_numpy(zero_copy_only=False))
-                else:
-                    meta_sha.append(_sha256_arrow(carr))
-                if sort_key == "content_len":
-                    meta_clen.append(_utf16_len_arrow(carr))
-            use_fast = (
-                fast_ok
-                and pa.types.is_string(carr.type)
-                and carr.null_count == 0
-                and len(carr) > 0
-                and bool(pc.all(pc.string_is_ascii(carr)).as_py())
-            )
+    for rb in batches:
+        nrows = rb.num_rows
+        b_doc_ids = np.arange(row_base, row_base + nrows, dtype=np.int64)
+        row_base += nrows
+        b_parts = rb.column("part").to_numpy().astype(np.int64)
+        carr = rb.column("content")
+        meta_repo.append(rb.column("repo").to_numpy(zero_copy_only=False))
+        meta_path.append(rb.column("path").to_numpy(zero_copy_only=False))
+        meta_commit.append(rb.column("commit").to_numpy(zero_copy_only=False))
+        meta_lang.append(rb.column("lang").to_numpy(zero_copy_only=False))
+        if "content_sha256" in rb.schema.names:
+            meta_sha.append(rb.column("content_sha256").to_numpy(zero_copy_only=False))
         else:
-            if assign is not None:
-                nrows = len(pdf)
-                b_doc_ids = np.arange(row_base, row_base + nrows, dtype=np.int64)
-                row_base += nrows
-                meta_repo.append(pdf["repo"].to_numpy())
-                meta_path.append(pdf["path"].to_numpy())
-                meta_commit.append(pdf["commit"].to_numpy())
-                meta_lang.append(pdf["lang"].to_numpy())
-                if "content_sha256" in pdf.columns:
-                    meta_sha.append(pdf["content_sha256"].to_numpy())
-                else:
-                    import hashlib
-
-                    meta_sha.append(
-                        np.asarray(
-                            [
-                                hashlib.sha256(str(x).encode()).hexdigest()
-                                for x in pdf["content"]
-                            ],
-                            dtype=object,
-                        )
-                    )
-                if sort_key == "content_len":
-                    meta_clen.append(
-                        np.asarray(
-                            [len(str(x).encode("utf-16-le")) // 2 for x in pdf["content"]],
-                            dtype=np.int64,
-                        )
-                    )
-            else:
-                b_doc_ids = pdf["doc_id"].to_numpy(np.int64)
-            b_parts = pdf["part"].to_numpy(np.int64)
-            carr = None
-            use_fast = False
+            meta_sha.append(_sha256_arrow(carr))
+        if sort_key == "content_len":
+            meta_clen.append(_utf16_len_arrow(carr))
+        use_fast = (
+            fast_ok
+            and pa.types.is_string(carr.type)
+            and carr.null_count == 0
+            and len(carr) > 0
+            and bool(pc.all(pc.string_is_ascii(carr)).as_py())
+        )
         if use_fast:
             (docs_b, segs_b, dlqs_b, codes_b, tfs_b, uniques_b, pos_b, dl_b,
              ostart_b, olen_b, pay_b) = _count_batch_arrow(
                 b_doc_ids, b_parts, carr, positions
             )
         else:
-            content = pdf["content"] if carr is None else carr.to_pandas()
             (docs_b, segs_b, dlqs_b, codes_b, tfs_b, uniques_b, pos_b, dl_b,
              ostart_b, olen_b, pay_b) = _count_batch(
-                b_doc_ids, b_parts, content, positions,
+                b_doc_ids, b_parts, carr.to_pandas(), positions,
                 stop_words=stop_words, char_filters=char_filters, word_break=word_break,
                 offsets=offsets, payload_fn=payload_fn,
             )
@@ -835,7 +644,7 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
             remap[j] = c
         acc.append((docs_b, segs_b, dlqs_b, remap[codes_b] if len(codes_b) else codes_b, tfs_b))
 
-    if assign is not None and row_base:
+    if row_base:
         # the task holds complete segments: assign docIDs with the oracle's
         # canonical ordering, then remap the task-local row ids everywhere
         part_all = np.concatenate(norm_parts).astype(np.int64)
@@ -847,8 +656,6 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
         keys = [commit_all, path_all, repo_all]
         if sort_key == "content_len":
             keys.append(np.concatenate(meta_clen))
-        elif sort_key is not None:
-            raise ValueError(f"unknown sort_key {sort_key!r} (supported: 'content_len')")
         keys.append(part_all)
         order_a = np.lexsort(tuple(keys))
         sp = part_all[order_a]
@@ -1003,18 +810,24 @@ def _dwpt_partition_arrow(batches, **kw):
         yield pa.RecordBatch.from_pandas(out, schema=schema, preserve_index=False)
 
 
-def norms_jvm(d: DataFrame) -> DataFrame:
-    """(doc_id, dl, dlq) without explode or Python: dl = size of the
-    filtered token array; dlq via the SmallFloat SQL expression. Token
-    COUNT is case-insensitive, so no lower() needed (split-first order)."""
-    toks = F.split("content", r"(?U)\W+")
-    dl = F.size(F.filter(toks, lambda x: (x != "") & (F.length(x) <= 255)))
-    return d.select("doc_id", dl.alias("dl")).withColumn(
-        "dlq", F.expr(dlq_sql("dl")).cast("int")
-    )
-
-
 # --- build -------------------------------------------------------------------
+
+
+def _check_build_options(sort_key, codec, word_break, positions, offsets, payloads) -> None:
+    """Reject unsupported build options on the driver, before any Spark
+    job: an unknown sort_key or word_break would otherwise raise only
+    inside a DWPT task, and an unknown codec would silently write FOR
+    blocks under a bogus manifest name."""
+    if sort_key not in (None, "content_len"):
+        raise ValueError(f"unknown sort_key {sort_key!r} (supported: 'content_len')")
+    if codec not in ("for", "pfor"):
+        raise ValueError(f"unknown codec {codec!r} (for | pfor)")
+    if word_break not in (None, "simple", "uax29"):
+        raise ValueError(f"unknown word_break {word_break!r} (simple | uax29)")
+    if offsets and not positions:
+        raise ValueError("offsets=True requires positions=True")
+    if payloads and not positions:
+        raise ValueError("payloads require positions=True")
 
 
 def stage_corpus(
@@ -1077,6 +890,28 @@ def _staged_group(spark: SparkSession, out_dir: str, g: int) -> DataFrame | None
     return spark.read.parquet(*paths)
 
 
+def block_term_stats(blocks: DataFrame) -> DataFrame:
+    """(term, doc_freq, total_term_freq, n_blocks) from postings block
+    rows' metadata (n, sum_tf) — no decode. The map side of the terms
+    dict: a group's partial, or the whole dict of merged postings."""
+    return blocks.groupBy("term").agg(
+        F.sum("n").cast("long").alias("doc_freq"),
+        F.sum("sum_tf").cast("long").alias("total_term_freq"),
+        F.count("*").cast("long").alias("n_blocks"),
+    )
+
+
+def sum_term_partials(spark: SparkSession, partial_dirs: list) -> DataFrame:
+    """Sum the per-group terms partials (block_term_stats outputs) under
+    partial_dirs into one (term, doc_freq, total_term_freq, n_blocks) row
+    per term: groups hold disjoint docs, so df/ttf/blocks add up."""
+    return spark.read.parquet(*partial_dirs).groupBy("term").agg(
+        F.sum("doc_freq").cast("long").alias("doc_freq"),
+        F.sum("total_term_freq").cast("long").alias("total_term_freq"),
+        F.sum("n_blocks").cast("long").alias("n_blocks"),
+    )
+
+
 def write_terms_dict(agg: DataFrame, out_path: str, n_range_parts: int) -> None:
     """Write a term-sorted dict with dense global ordinals (OrdinalMap,
     clt/index/ordinal_map.rs:1-527). agg must have columns (term, doc_freq,
@@ -1127,7 +962,6 @@ def build_index(
     num_groups: int = 1,
     resume: bool = True,
     shuffle_width: int | None = None,
-    analyzer: str = "dwpt",
     positions: bool = False,
     cleanup_staged: bool = True,
     stop_words=None,
@@ -1150,16 +984,7 @@ def build_index(
                    scans across concurrent group builders)
       3. finalize: global terms dict + manifest commit
     On a cluster, phases 1 and 2 are what N vs 4N executors parallelize."""
-    if analyzer == "jvm" and positions:
-        raise ValueError(
-            "positions require analyzer='dwpt' (the jvm path writes no pos stream)"
-        )
-    if analyzer == "jvm" and word_break != "simple":
-        raise ValueError("word_break='uax29' requires analyzer='dwpt'")
-    if offsets and not positions:
-        raise ValueError("offsets=True requires positions=True")
-    if payloads and not positions:
-        raise ValueError("payloads require positions=True")
+    _check_build_options(sort_key, codec, word_break, positions, offsets, payloads)
     reject_null_metadata(spark.read.parquet(source) if isinstance(source, str) else source)
     t_start = time.time()
     # shuffle_width = physical task fan-out for the heavy stages; decoupled
@@ -1180,7 +1005,7 @@ def build_index(
     for g in range(num_groups):
         gs = build_group_job(
             spark, src_for_groups, out_dir, g, num_groups, num_partitions,
-            width=width, analyzer=analyzer, positions=positions, resume=resume,
+            width=width, positions=positions, resume=resume,
             stop_words=stop_words, char_filters=char_filters, codec=codec,
             word_break=word_break, offsets=offsets, payloads=payloads,
             sort_key=sort_key,
@@ -1192,22 +1017,12 @@ def build_index(
     # postings-sized map side ran INSIDE each (parallel) group job, so
     # this serial tail is only O(vocab × groups), not O(postings)
     t_terms = time.time()
+    # every group job that has docs wrote its partial
     partial_dirs = sorted(glob.glob(os.path.join(out_dir, "terms_partial", "group=*")))
-    if partial_dirs:
-        src_terms = spark.read.parquet(*partial_dirs).groupBy("term").agg(
-            F.sum("doc_freq").cast("long").alias("doc_freq"),
-            F.sum("total_term_freq").cast("long").alias("total_term_freq"),
-            F.sum("n_blocks").cast("long").alias("n_blocks"),
-        )
-    else:  # legacy indexes without partials
-        postings = spark.read.parquet(os.path.join(out_dir, "postings"))
-        src_terms = postings.groupBy("term").agg(
-            F.sum("n").cast("long").alias("doc_freq"),
-            F.sum("sum_tf").cast("long").alias("total_term_freq"),
-            F.count("*").cast("long").alias("n_blocks"),
-        )
     write_terms_dict(
-        src_terms, os.path.join(out_dir, "terms"), max(1, min(num_partitions // 8, 64))
+        sum_term_partials(spark, partial_dirs),
+        os.path.join(out_dir, "terms"),
+        max(1, min(num_partitions // 8, 64)),
     )
     _dbg("terms", t_terms)
 
@@ -1256,7 +1071,6 @@ def build_group_job(
     num_groups: int,
     num_partitions: int,
     width: int | None = None,
-    analyzer: str = "dwpt",
     positions: bool = False,
     resume: bool = True,
     stop_words=None,
@@ -1275,6 +1089,7 @@ def build_group_job(
     Reads the group's staged slice (partition-pruned) when staging ran;
     falls back to scan+filter of `source` only when no staged data exists
     (legacy path — O(corpus) per group, avoid for multi-group builds)."""
+    _check_build_options(sort_key, codec, word_break, positions, offsets, payloads)
     width = width or spark.sparkContext.defaultParallelism
     os.makedirs(os.path.join(out_dir, "checkpoints"), exist_ok=True)
     ck_path = os.path.join(out_dir, "checkpoints", f"group_{g}.json")
@@ -1297,7 +1112,7 @@ def build_group_job(
         if num_groups > 1:
             docs = docs.filter(F.col("part") % num_groups == g)
     gs = _build_group(
-        docs, out_dir, g, num_groups, width, analyzer, positions,
+        docs, out_dir, g, num_groups, width, positions=positions,
         stop_words=stop_words, char_filters=char_filters, codec=codec,
         word_break=word_break, offsets=offsets, payloads=payloads,
         sort_key=sort_key,
@@ -1345,7 +1160,7 @@ def _unpack_norm_blocks(batches):
 
 def _build_group(
     docs_with_part: DataFrame, out_dir: str, g: int, num_groups: int, width: int,
-    analyzer: str = "dwpt", positions: bool = False,
+    positions: bool = False,
     postings_dirname: str = "postings",
     stop_words=None, char_filters=None, codec: str = "for",
     word_break: str = "simple", offsets: bool = False, payloads=None,
@@ -1353,18 +1168,13 @@ def _build_group(
     norms_dirname: str = "norms", docmap_dirname: str = "docmap",
 ) -> dict:
     """Build one checkpoint group from its (pre-filtered) slice of the
-    corpus. With the dwpt analyzer the slice's content is read EXACTLY
-    ONCE (the DWPT kernel emits postings and sentinel norm blocks in the
-    same pass); docmap reuses the staged per-row sha256 when present.
-    postings_dirname routes the postings write into the index's CURRENT
-    postings generation (streaming appends after a merge compaction).
-
-    r7: the dwpt path no longer materializes a docID-windowed copy of the
-    corpus. The corpus is hash-shuffled by part ONCE (no sort) straight
-    into the DWPT kernel, which assigns docIDs locally (it holds complete
-    segments) and emits postings + norms + the doc map in one pass — the
-    JVM window over full content rows and the corpus-sized persist are
-    gone (guide §2.4/§8: decide with small rows, move heavy bytes once)."""
+    corpus. The slice's content is read EXACTLY ONCE: it is hash-shuffled
+    by part (no sort) straight into the DWPT kernel, which assigns docIDs
+    locally (it holds complete segments) and emits postings, sentinel norm
+    blocks and the doc map in one pass; the doc map reuses the staged
+    per-row sha256 when present. postings_dirname routes the postings
+    write into the index's CURRENT postings generation (streaming appends
+    after a merge compaction)."""
     spark = docs_with_part.sparkSession
 
     def gdir(name: str) -> str:
@@ -1376,163 +1186,95 @@ def _build_group(
         return os.path.join(out_dir, name, f"group={g}")
 
     t = time.time()
-    # postings: DWPT-per-task local build → packed blocks → ONE shuffle of
-    # block rows into global term-range order (the hierarchical merge:
-    # Spark's range shuffle IS the k-way term merge, SURVEY.md §2.3)
-    if analyzer == "jvm":
-        if stop_words or char_filters:
-            raise ValueError("stop_words/char_filters require analyzer='dwpt'")
-        d = assign_doc_ids(docs_with_part, sort_key=sort_key).persist()
-        if _DEBUG:
-            d.count()
-            t = _dbg("corpus shuffle+window (materialize d)", t)
-        # doc map: identity + per-row sha256 integrity hash — pure JVM
-        # (row-store role stays with the source table, SURVEY.md §1.4);
-        # staged corpora carry the hash already
-        sha = (
-            F.col("content_sha256")
-            if "content_sha256" in d.columns
-            else F.sha2(F.col("content"), 256)
-        )
-        docmap = d.select(
-            "doc_id", "part", "repo", "path", "commit", "lang",
-            sha.alias("content_sha256"),
-        ).persist()
-        docmap.drop("part").repartitionByRange(max(1, width // 4), "doc_id").sortWithinPartitions(
-            "doc_id"
-        ).write.mode("overwrite").parquet(gdir("docmap"))
-        t = _dbg("docmap", t)
-        norms = norms_jvm(d).persist()
-        norms.repartitionByRange(max(1, width // 4), "doc_id").sortWithinPartitions(
-            "doc_id"
-        ).write.mode("overwrite").parquet(gdir("norms"))
-        t = _dbg("norms", t)
-        flat = flat_postings_jvm(d)
-        blocks_local = (
-            flat.repartitionByRange(width, "term")
-            .sortWithinPartitions("term", "seg", "doc_id")
-            .mapInPandas(_pack_partition, schema=_BLOCK_SCHEMA)
-        )
-        blocks_local.write.mode("overwrite").parquet(gdir("postings"))
-        (
-            spark.read.parquet(gdir("postings"))
-            .groupBy("term")
-            .agg(
-                F.sum("n").cast("long").alias("doc_freq"),
-                F.sum("sum_tf").cast("long").alias("total_term_freq"),
-                F.count("*").cast("long").alias("n_blocks"),
-            )
-            .write.mode("overwrite")
-            .parquet(gdir("terms_partial"))
-        )
-        t = _dbg("postings", t)
-        seg_ttf = {
-            int(r["seg"]): int(r["ttf"])
-            for r in norms.groupBy(F.shiftright("doc_id", PARTITION_SHIFT).alias("seg"))
-            .agg(F.sum("dl").alias("ttf"))
-            .collect()
-        }
-        norms.unpersist()
-    else:
-        # ONE content shuffle (hash by part, no sort): each task holds
-        # complete segments; the kernel assigns docIDs and emits postings,
-        # norms AND the doc map in a single pass over the content
-        cols = ["part", "repo", "path", "commit", "lang", "content"]
-        if "content_sha256" in docs_with_part.columns:
-            cols.append("content_sha256")
-        routed = docs_with_part.select(*cols).repartition(width, "part")
+    # ONE content shuffle (hash by part, no sort): each task holds
+    # complete segments; the kernel assigns docIDs and emits postings,
+    # norms AND the doc map in a single pass over the content
+    cols = ["part", "repo", "path", "commit", "lang", "content"]
+    if "content_sha256" in docs_with_part.columns:
+        cols.append("content_sha256")
+    routed = docs_with_part.select(*cols).repartition(width, "part")
 
-        sw = frozenset(stop_words) if stop_words else None
-        cf = tuple(tuple(c) for c in char_filters) if char_filters else None
+    sw = frozenset(stop_words) if stop_words else None
+    cf = tuple(tuple(c) for c in char_filters) if char_filters else None
 
-        from lucene_rust_spark.functions.analysis import resolve_payload_fn
+    from lucene_rust_spark.functions.analysis import resolve_payload_fn
 
-        pfn, _ = resolve_payload_fn(payloads)
+    pfn, _ = resolve_payload_fn(payloads)
 
-        def dwpt(batches, _p=positions, _sw=sw, _cf=cf, _pf=(codec == "pfor"), _wb=word_break, _of=offsets, _pl=pfn, _sk=sort_key):
-            return _dwpt_partition_arrow(
-                batches, positions=_p, stop_words=_sw, char_filters=_cf, pfor=_pf,
-                word_break=_wb, offsets=_of, payload_fn=_pl,
-                assign={"sort_key": _sk},
-            )
+    def dwpt(batches, _p=positions, _sw=sw, _cf=cf, _pf=(codec == "pfor"), _wb=word_break, _of=offsets, _pl=pfn, _sk=sort_key):
+        return _dwpt_partition_arrow(
+            batches, positions=_p, stop_words=_sw, char_filters=_cf, pfor=_pf,
+            word_break=_wb, offsets=_of, payload_fn=_pl, sort_key=_sk,
+        )
 
-        # persist before repartitionByRange: the range sampling pass would
-        # otherwise re-run the whole DWPT kernel a second time
-        blocks = routed.mapInArrow(dwpt, schema=_BLOCK_SCHEMA).persist()
-        if _DEBUG:
-            blocks.count()
-            t = _dbg("dwpt kernel (materialize)", t)
-        sentinel = F.col("term").isin([NORM_TERM, DOCMAP_TERM])
-        (
-            blocks.filter(~sentinel)
-            .repartitionByRange(width, "term")
-            .sortWithinPartitions("term", "seg", "block_no")
-            .write.mode("overwrite")
-            .parquet(gdir("postings"))
+    # persist before repartitionByRange: the range sampling pass would
+    # otherwise re-run the whole DWPT kernel a second time
+    blocks = routed.mapInArrow(dwpt, schema=_BLOCK_SCHEMA).persist()
+    if _DEBUG:
+        blocks.count()
+        t = _dbg("dwpt kernel (materialize)", t)
+    # postings: packed blocks → ONE shuffle of block rows into global
+    # term-range order (the hierarchical merge: Spark's range shuffle IS
+    # the k-way term merge, SURVEY.md §2.3)
+    sentinel = F.col("term").isin([NORM_TERM, DOCMAP_TERM])
+    (
+        blocks.filter(~sentinel)
+        .repartitionByRange(width, "term")
+        .sortWithinPartitions("term", "seg", "block_no")
+        .write.mode("overwrite")
+        .parquet(gdir("postings"))
+    )
+    if _DEBUG:
+        t = _dbg("postings shuffle+write", t)
+    # doc map: deserialize the kernel's IPC sentinel rows and lay out
+    # by docID range (metadata-only shuffle)
+    (
+        blocks.filter(F.col("term") == DOCMAP_TERM)
+        .select("docs_bin")
+        .mapInArrow(
+            _unpack_docmap_blocks,
+            schema="doc_id long, repo string, path string, commit string,"
+            " lang string, content_sha256 string",
         )
-        if _DEBUG:
-            t = _dbg("postings shuffle+write", t)
-        # doc map: deserialize the kernel's IPC sentinel rows and lay out
-        # by docID range (metadata-only shuffle)
-        (
-            blocks.filter(F.col("term") == DOCMAP_TERM)
-            .select("docs_bin")
-            .mapInArrow(
-                _unpack_docmap_blocks,
-                schema="doc_id long, repo string, path string, commit string,"
-                " lang string, content_sha256 string",
-            )
-            .repartitionByRange(max(1, width // 4), "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(gdir("docmap"))
-        )
-        if _DEBUG:
-            t = _dbg("docmap write", t)
-        # per-group terms partial (map side of the global dictionary agg,
-        # computed here so it parallelizes across group builders and the
-        # finalize tail only merges vocab-sized partials)
-        (
-            blocks.filter(~sentinel)
-            .groupBy("term")
-            .agg(
-                F.sum("n").cast("long").alias("doc_freq"),
-                F.sum("sum_tf").cast("long").alias("total_term_freq"),
-                F.count("*").cast("long").alias("n_blocks"),
-            )
-            .write.mode("overwrite")
-            .parquet(gdir("terms_partial"))
-        )
-        if _DEBUG:
-            t = _dbg("terms_partial", t)
-        norm_blocks = blocks.filter(F.col("term") == NORM_TERM)
-        (
-            norm_blocks.select("n", "first_doc", "docs_bin", "tfs_bin", "dlq_bin")
-            .mapInPandas(_unpack_norm_blocks, schema="doc_id long, dl int, dlq int")
-            .repartitionByRange(max(1, width // 4), "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(gdir("norms"))
-        )
-        if _DEBUG:
-            t = _dbg("norms write", t)
-        # per-segment total term freq straight from block metadata
-        seg_ttf = {
-            int(r["seg"]): int(r["ttf"])
-            for r in norm_blocks.groupBy("seg").agg(F.sum("sum_tf").alias("ttf")).collect()
-        }
-        blocks.unpersist()
+        .repartitionByRange(max(1, width // 4), "doc_id")
+        .sortWithinPartitions("doc_id")
+        .write.mode("overwrite")
+        .parquet(gdir("docmap"))
+    )
+    if _DEBUG:
+        t = _dbg("docmap write", t)
+    # per-group terms partial (map side of the global dictionary agg,
+    # computed here so it parallelizes across group builders and the
+    # finalize tail only merges vocab-sized partials)
+    block_term_stats(blocks.filter(~sentinel)).write.mode("overwrite").parquet(
+        gdir("terms_partial")
+    )
+    if _DEBUG:
+        t = _dbg("terms_partial", t)
+    norm_blocks = blocks.filter(F.col("term") == NORM_TERM)
+    (
+        norm_blocks.select("n", "first_doc", "docs_bin", "tfs_bin", "dlq_bin")
+        .mapInPandas(_unpack_norm_blocks, schema="doc_id long, dl int, dlq int")
+        .repartitionByRange(max(1, width // 4), "doc_id")
+        .sortWithinPartitions("doc_id")
+        .write.mode("overwrite")
+        .parquet(gdir("norms"))
+    )
+    if _DEBUG:
+        t = _dbg("norms write", t)
+    # per-segment total term freq straight from block metadata
+    seg_ttf = {
+        int(r["seg"]): int(r["ttf"])
+        for r in norm_blocks.groupBy("seg").agg(F.sum("sum_tf").alias("ttf")).collect()
+    }
+    blocks.unpersist()
     t = _dbg("postings+norms", t)
 
-    if analyzer == "jvm":
-        seg_src = docmap
-    else:
-        # the written docmap is KB-per-group metadata; part = docID high bits
-        seg_src = spark.read.parquet(gdir("docmap")).withColumn(
-            "part", F.shiftright("doc_id", PARTITION_SHIFT)
-        )
+    # the written docmap is KB-per-group metadata; part = docID high bits
     seg_rows = (
-        seg_src.groupBy("part")
+        spark.read.parquet(gdir("docmap"))
+        .withColumn("part", F.shiftright("doc_id", PARTITION_SHIFT))
+        .groupBy("part")
         .agg(
             F.count("*").alias("max_doc"),
             F.min("doc_id").alias("doc_base"),
@@ -1543,9 +1285,6 @@ def _build_group(
         .collect()
     )
     t = _dbg("seg_stats", t)
-    if analyzer == "jvm":
-        docmap.unpersist()
-        d.unpersist()
     segments = [
         {
             "seg": int(r["part"]),

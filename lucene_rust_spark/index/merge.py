@@ -22,7 +22,12 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from lucene_rust_spark.functions import kernels as K
-from lucene_rust_spark.index.build import _BLOCK_SCHEMA, _pack_runs, write_terms_dict
+from lucene_rust_spark.index.build import (
+    _BLOCK_SCHEMA,
+    _pack_runs,
+    block_term_stats,
+    write_terms_dict,
+)
 from lucene_rust_spark.index.manifest import commit_manifest, read_manifest
 
 # A reclaiming merge collects the tombstone ids to the driver (the
@@ -443,22 +448,23 @@ def _reclaim_stores(spark, index_dir, m, gen, tomb_df, width):
         for r in dm
     }
 
-    # terms dict from the MERGED postings' block metadata (no decode)
-    merged_postings = spark.read.parquet(os.path.join(index_dir, f"postings_g{gen}"))
-    agg = merged_postings.groupBy("term").agg(
-        F.sum("n").cast("long").alias("doc_freq"),
-        F.sum("sum_tf").cast("long").alias("total_term_freq"),
-        F.count("*").cast("long").alias("n_blocks"),
-    )
-    write_terms_dict(
-        agg, os.path.join(index_dir, f"terms_g{gen}"), max(1, width // 8)
-    )
-
-    # per-group terms partials are now stale (they include reclaimed docs);
-    # remove them so appends re-aggregate from the merged postings instead
+    # the per-group terms partials are now stale (they include reclaimed
+    # docs): the MERGED postings' block metadata (no decode) becomes the
+    # index's one partial, which later appends and imports sum with
+    # theirs, and the terms dict is written from it
     import shutil
 
-    shutil.rmtree(os.path.join(index_dir, "terms_partial"), ignore_errors=True)
+    partial = os.path.join(index_dir, "terms_partial")
+    shutil.rmtree(partial, ignore_errors=True)
+    merged_postings = spark.read.parquet(os.path.join(index_dir, f"postings_g{gen}"))
+    block_term_stats(merged_postings).write.mode("overwrite").parquet(
+        os.path.join(partial, "group=0")
+    )
+    write_terms_dict(
+        spark.read.parquet(os.path.join(partial, "group=0")),
+        os.path.join(index_dir, f"terms_g{gen}"),
+        max(1, width // 8),
+    )
 
     folded = [
         os.path.relpath(d, index_dir)

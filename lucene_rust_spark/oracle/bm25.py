@@ -10,7 +10,8 @@ engine must be rank- AND score-identical to this.
 Pinned cross-engine contracts:
 - partition(row) = int(sha1(repo + "\\x00" + path + "\\x00" + commit)[:15 hex], 16) % P
 - doc_id = (partition << 40) | row_number  (rows sorted by (repo, path, commit)
-  within partition)  — the (segment, local docID) analog, SURVEY.md §1.4
+  within partition; sort_key='content_len' leads with the content length in
+  UTF-16 code units)  — the (segment, local docID) analog, SURVEY.md §1.4
 - per-term score: kernels.bm25_score (float32)
 - multi-term total: float32 sum of per-term scores in ascending-term order
 - top-k order: (-score, doc_id); ties by ascending doc_id (HitQueue convention,
@@ -36,14 +37,31 @@ def partition_of(repo: str, path: str, commit: str, num_partitions: int) -> int:
     return int(h[:15], 16) % num_partitions
 
 
-def assign_doc_ids(df: pd.DataFrame, num_partitions: int) -> pd.DataFrame:
-    """Canonical deterministic docID assignment (engine must match)."""
+def utf16_len(text: str) -> int:
+    """content_len unit (FIXTURES.md §1): UTF-16 code units, so a char
+    above U+FFFF counts two."""
+    return len(text.encode("utf-16-le")) // 2
+
+
+def assign_doc_ids(
+    df: pd.DataFrame, num_partitions: int, sort_key: str | None = None
+) -> pd.DataFrame:
+    """Canonical deterministic docID assignment (engine must match).
+    sort_key='content_len' orders each partition by content length first
+    (the index-sort build); (repo, path, commit) stays the tiebreak."""
+    if sort_key not in (None, "content_len"):
+        raise ValueError(f"unknown sort_key {sort_key!r} (supported: 'content_len')")
     df = df.copy()
     df["part"] = [
         partition_of(r, p, c, num_partitions)
         for r, p, c in zip(df["repo"], df["path"], df["commit"])
     ]
-    df = df.sort_values(["part", "repo", "path", "commit"], kind="mergesort").reset_index(drop=True)
+    order = ["part", "repo", "path", "commit"]
+    if sort_key == "content_len":
+        df["_clen"] = [utf16_len(x) for x in df["content"]]
+        order.insert(1, "_clen")
+    df = df.sort_values(order, kind="mergesort").reset_index(drop=True)
+    df = df.drop(columns="_clen", errors="ignore")
     rn = df.groupby("part").cumcount()
     df["doc_id"] = (df["part"].to_numpy(np.int64) << PARTITION_SHIFT) | rn.to_numpy(np.int64)
     return df
@@ -75,9 +93,9 @@ class OracleIndex:
 
 def build_oracle_index(
     df: pd.DataFrame, num_partitions: int, stop_words=None, char_filters=None,
-    word_break="simple",
+    word_break="simple", sort_key: str | None = None,
 ) -> OracleIndex:
-    df = assign_doc_ids(df, num_partitions)
+    df = assign_doc_ids(df, num_partitions, sort_key=sort_key)
     doc_ids = df["doc_id"].to_numpy(np.int64)  # sorted by construction
     assert (np.diff(doc_ids) > 0).all()
     postings: dict[str, tuple[list, list]] = {}

@@ -20,6 +20,7 @@ from lucene_rust_spark.index.build import (
     PARTITION_SHIFT,
     _build_group,
     reject_null_metadata,
+    sum_term_partials,
     with_partition,
     write_terms_dict,
 )
@@ -94,28 +95,15 @@ def append_batch(
     manifest["content_sha256_xor"] = format(xor & 0xFFFFFFFFFFFFFFFF, "016x")
 
     # refresh the global terms dict (df/ttf changed); write to a new
-    # generation dir so readers of the old one are unaffected. Merge the
-    # per-group terms partials (vocab-sized) when available — df/ttf are
-    # merge-invariant, so partials stay valid across segment compactions.
+    # generation dir so readers of the old one are unaffected. Sum the
+    # per-group terms partials (vocab-sized; this batch's was just
+    # written) — df/ttf are merge-invariant, and a reclaiming merge
+    # leaves one partial of its merged postings.
     terms_dir = f"terms_g{manifest['generation']}"
     import glob as _glob
 
     partial_dirs = sorted(_glob.glob(os.path.join(index_dir, "terms_partial", "group=*")))
-    if partial_dirs:
-        agg = spark.read.parquet(*partial_dirs).groupBy("term").agg(
-            F.sum("doc_freq").cast("long").alias("doc_freq"),
-            F.sum("total_term_freq").cast("long").alias("total_term_freq"),
-            F.sum("n_blocks").cast("long").alias("n_blocks"),
-        )
-    else:
-        postings = spark.read.parquet(
-            os.path.join(index_dir, m.get("postings_dir", "postings"))
-        )
-        agg = postings.groupBy("term").agg(
-            F.sum("n").cast("long").alias("doc_freq"),
-            F.sum("sum_tf").cast("long").alias("total_term_freq"),
-            F.count("*").cast("long").alias("n_blocks"),
-        )
+    agg = sum_term_partials(spark, partial_dirs)
     # same ordinal-bearing writer as build finalize: built and appended
     # dicts keep one schema and the dense-ordinal invariant survives appends
     write_terms_dict(agg, os.path.join(index_dir, terms_dir), max(1, width // 8))

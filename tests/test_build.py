@@ -156,26 +156,33 @@ def test_block_impacts_frontier():
         assert any(ft >= t and fq <= q for ft, fq in zip(imp_tf, imp_dlq))
 
 
-def test_jvm_analyzer_build_matches_dwpt(spark, tmp_path):
-    """analyzer='jvm' (pure whole-stage-codegen tokenize + explode/groupBy)
-    must produce an index with identical stats and identical top-k results
-    to the dwpt kernel path on an ASCII corpus."""
-    from lucene_rust_spark.corpus import gen_corpus_spark
-    from lucene_rust_spark.index.build import build_index
-    from lucene_rust_spark.oracle.bm25 import bool_query
-    from lucene_rust_spark.search.searcher import IndexSearcher
+@pytest.mark.parametrize("entry", ["build_index", "build_group_job"])
+@pytest.mark.parametrize(
+    "opt", [{"sort_key": "size"}, {"codec": "zstd"}, {"word_break": "icu"}],
+    ids=["sort_key", "codec", "word_break"],
+)
+def test_bad_build_options_rejected_before_any_job(spark, tmp_path, entry, opt):
+    """An unknown sort_key, codec or word_break is a ValueError on the
+    driver before any Spark job starts — not a failure inside a DWPT task,
+    nor (codec) FOR blocks written under a bogus manifest name."""
+    from lucene_rust_spark.corpus import gen_corpus_pandas
+    from lucene_rust_spark.index.build import build_group_job, build_index
 
-    src = gen_corpus_spark(spark, 300, 4)
-    m_d = build_index(spark, src, str(tmp_path / "dwpt"), num_partitions=4)
-    m_j = build_index(spark, src, str(tmp_path / "jvm"), num_partitions=4, analyzer="jvm")
-    for key in ["doc_count", "sum_total_term_freq", "content_sha256_xor"]:
-        assert m_j[key] == m_d[key], key
-    sd = IndexSearcher(spark, str(tmp_path / "dwpt"))
-    sj = IndexSearcher(spark, str(tmp_path / "jvm"))
-    for q in [{"type": "term", "term": "merge"}, bool_query(should=["merge", "window"]),
-              bool_query(must=["value", "merge"])]:
-        assert sj.search(q, 10) == sd.search(q, 10)
-        assert sj.count(q) == sd.count(q)
+    (name,) = opt
+    src = spark.createDataFrame(gen_corpus_pandas(20).drop(columns=["row_id"]))
+    out = str(tmp_path / "idx")
+    sc = spark.sparkContext
+    group = f"bad-build-option-{entry}-{name}"
+    sc.setJobGroup(group, "bad build option")
+    try:
+        with pytest.raises(ValueError, match=name):
+            if entry == "build_index":
+                build_index(spark, src, out, num_partitions=2, **opt)
+            else:
+                build_group_job(spark, src, out, 0, 1, 2, **opt)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_pfor_codec_build_rank_identity(spark, tmp_path, oracle_idx):

@@ -9,9 +9,10 @@ import pytest
 
 from lucene_rust_spark.functions import kernels as K
 from lucene_rust_spark.index.build import (
+    DOCMAP_TERM,
+    NORM_TERM,
     _count_batch,
     _count_batch_arrow,
-    _dwpt_partition,
     _dwpt_partition_arrow,
     block_impacts,
     block_impacts_batch,
@@ -60,62 +61,96 @@ def test_count_batch_arrow_sliced_buffer():
     assert toks == [(0, "abc"), (1, "def"), (1, "ghi")]
 
 
-def test_dwpt_arrow_nonascii_falls_back_identically():
-    # non-ASCII batches route through the regex path: block output of the
-    # arrow wrapper must equal the pandas kernel's on the same rows
-    docs = ["café naïve merge", "merge window", "λx x", "plain ascii only"]
-    pdf = pd.DataFrame(
+def _meta_batch(docs, parts):
+    n = len(docs)
+    return pa.RecordBatch.from_pydict(
         {
-            "doc_id": np.arange(4, dtype=np.int64),
-            "part": np.zeros(4, dtype=np.int64),
-            "content": docs,
+            "part": pa.array(parts, type=pa.int32()),
+            "repo": [f"r{i % 2}" for i in range(n)],
+            "path": [f"p/{i}" for i in range(n)],
+            "commit": [f"c{i:02d}" for i in range(n)],
+            "lang": ["en"] * n,
+            "content": pa.array(docs, type=pa.string()),
         }
     )
-    rb = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
-    ref = pd.concat(list(_dwpt_partition(iter([pdf]), positions=True)), ignore_index=True)
-    got = pd.concat(
-        [b.to_pandas() for b in _dwpt_partition_arrow(iter([rb]), positions=True)],
+
+
+def test_dwpt_arrow_nonascii_falls_back_identically():
+    # a non-ASCII batch routes through the regex path (an ASCII batch in
+    # the same task takes the byte-LUT path): the kernel's blocks must
+    # decode to the (term, doc, tf, positions) the regex reference counts
+    batches = [
+        (["café naïve merge", "merge window", "λx x", "plain ascii only"], [0, 1, 0, 1]),
+        (["merge plain", "window x x"], [1, 0]),
+    ]
+    out = pd.concat(
+        [b.to_pandas() for b in _dwpt_partition_arrow(
+            iter([_meta_batch(d, p) for d, p in batches]), positions=True
+        )],
         ignore_index=True,
     )
-    key = ["term", "seg", "block_no"]
-    ref = ref.sort_values(key).reset_index(drop=True)
-    got = got.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(ref, got)
+    # row → doc_id through the docmap sentinel (rows in arrival order)
+    (blob,) = out.loc[out["term"] == DOCMAP_TERM, "docs_bin"]
+    row_doc = pa.ipc.open_stream(blob).read_all().column("doc_id").to_numpy()
+    got = {}
+    for r in out[~out["term"].isin([NORM_TERM, DOCMAP_TERM])].itertuples():
+        docs = r.first_doc + np.cumsum(K.for_unpack(r.docs_bin, r.n)).astype(np.int64)
+        tfs = K.for_unpack(r.tfs_bin, r.n).astype(np.int64)
+        pos = K.for_unpack(r.pos_bin, int(tfs.sum())).astype(np.int64)
+        ends = np.cumsum(tfs)
+        for d, tf, e, q in zip(docs, tfs, ends, r.dlq_bin):
+            got[(int(d), r.term)] = (q, int(tf), tuple(np.cumsum(pos[e - tf : e]).tolist()))
+    docs = [d for b, _ in batches for d in b]
+    parts = np.array([p for _, b in batches for p in b], dtype=np.int64)
+    ref, _ = _pairs(_count_batch(np.arange(len(docs)), parts, pd.Series(docs), True), True)
+    want = {(int(row_doc[row]), t): v[1:] for (row, t), v in ref.items()}
+    assert got == want
 
 
-def test_kernel_doc_id_assignment_content_len_utf16(spark, tmp_path):
-    """The in-kernel docID assignment (r7: the JVM window moved into the
-    DWPT task) must rank by (part, UTF-16 length, repo, path, commit) —
-    including astral chars counting as TWO units, Spark's length()."""
-    import pandas as pd
+@pytest.mark.parametrize("num_groups", [1, 3])
+@pytest.mark.parametrize("sort_key", [None, "content_len"])
+def test_kernel_doc_id_assignment_content_len_utf16(spark, tmp_path, sort_key, num_groups):
+    """In-kernel docID assignment ranks by (part[, content_len], repo,
+    path, commit) exactly as the oracle does, content_len counted in
+    UTF-16 code units (an astral char is TWO; Spark's length() would
+    count one). Every build's docmap rows, (doc_id, identity,
+    content_sha256), equal the same expected rows — so the single-group
+    build (sha256 hashed in the kernel) and the staged three-group build
+    (sha256 from Spark's sha2) agree with each other."""
+    import hashlib
 
-    from lucene_rust_spark.index.build import PARTITION_SHIFT, build_index
-    from lucene_rust_spark.oracle.bm25 import partition_of
+    from lucene_rust_spark.index.build import build_index
+    from lucene_rust_spark.oracle.bm25 import assign_doc_ids, utf16_len
 
     rows = []
     for i in range(40):
-        content = ("x " * (i % 7)) + ("\U0001f389" if i % 3 == 0 else "yy")
+        k = 1 + i % 5
+        head = ("\U0001f389" * k, "é" * (k + 2), "x" * (k + 3))[i % 3]
         rows.append(
             {"repo": f"r{i%4}", "path": f"p/{i}", "commit": f"c{i:02d}",
-             "lang": "en", "content": content}
+             "lang": "en", "content": f"{head} w{i % 6}"}
         )
     pdf = pd.DataFrame(rows)
-    idx = str(tmp_path / "idx_clen")
+    oracle = assign_doc_ids(pdf, 4, sort_key=sort_key)
+    # the corpus must tell the units apart: some segment holds two docs
+    # that codepoint length and UTF-16 length order oppositely
+    assert any(
+        len(a) < len(b) and utf16_len(a) > utf16_len(b)
+        for _, seg in oracle.groupby("part")
+        for a in seg["content"] for b in seg["content"]
+    )
+    idx = str(tmp_path / "idx")
     build_index(spark, spark.createDataFrame(pdf), idx, num_partitions=4,
-                sort_key="content_len")
-    got = {
-        (r["repo"], r["path"], r["commit"]): int(r["doc_id"])
-        for r in spark.read.parquet(f"{idx}/docmap").collect()
-    }
-    pdf["part"] = [partition_of(r, p, c, 4) for r, p, c in zip(pdf["repo"], pdf["path"], pdf["commit"])]
-    pdf["clen"] = [len(x.encode("utf-16-le")) // 2 for x in pdf["content"]]
-    pdf = pdf.sort_values(["part", "clen", "repo", "path", "commit"], kind="mergesort")
-    rank = pdf.groupby("part").cumcount()
-    expected = {
-        (r, p, c): (int(pt) << PARTITION_SHIFT) | int(rk)
-        for r, p, c, pt, rk in zip(pdf["repo"], pdf["path"], pdf["commit"], pdf["part"], rank)
-    }
-    assert got == expected
+                num_groups=num_groups, sort_key=sort_key)
+    expected = sorted(
+        (int(d), r, p, c, hashlib.sha256(x.encode()).hexdigest())
+        for d, r, p, c, x in zip(oracle["doc_id"], oracle["repo"], oracle["path"],
+                                 oracle["commit"], oracle["content"])
+    )
+    got = spark.read.parquet(f"{idx}/docmap").select(
+        "doc_id", "repo", "path", "commit", "content_sha256"
+    )
+    assert sorted(map(tuple, got.collect())) == expected
 
 
 def test_hnsw_driver_path_matches_distributed(spark, tmp_path):

@@ -3,6 +3,8 @@ and append-after-merge — round-2 feature coverage."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -594,6 +596,16 @@ def test_soft_deletes_and_merge_reclaim(spark, tmp_path):
     append_batch(spark, extra, out, epoch=0, num_partitions=2)
     s3 = IndexSearcher(spark, out)
     assert s3.count({"type": "match_all"}) == pre_doc_count - 2 + 20
+    # the refreshed terms dict covers the merged AND the appended docs:
+    # it equals the stats of every live postings block
+    from lucene_rust_spark.index.build import block_term_stats
+    from lucene_rust_spark.index.manifest import read_manifest
+
+    m3 = read_manifest(out)
+    cols = ["term", "doc_freq", "total_term_freq", "n_blocks"]
+    got = spark.read.parquet(os.path.join(out, m3["terms_dir"])).select(*cols)
+    want = block_term_stats(spark.read.parquet(os.path.join(out, m3["postings_dir"])))
+    assert sorted(got.collect()) == sorted(want.select(*cols).collect())
 
 
 def test_payload_fn_registry_across_appends(spark, tmp_path):
