@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from lucene_rust_spark.index.build import (
     PARTITION_SHIFT,
     block_term_stats,
+    ensure_term_partials,
+    postings_without_partials,
     sum_term_partials,
     write_terms_dict,
 )
@@ -79,6 +81,9 @@ def add_indexes(spark: SparkSession, dest_dir: str, src_dir: str) -> dict:
             f"the part-id namespace ({MAX_PART})"
         )
     shift = offset << PARTITION_SHIFT
+    # before the import writes: a destination whose partials an older
+    # reclaiming merge deleted gets them back from its postings
+    ensure_term_partials(spark, dest_dir, md)
     gimp = IMPORT_GROUP_BASE + sum(
         1 for s in md["segments"] if s.get("group", 0) >= IMPORT_GROUP_BASE
     )
@@ -131,13 +136,13 @@ def add_indexes(spark: SparkSession, dest_dir: str, src_dir: str) -> dict:
     # terms: import the source's vocab-sized partials under the import
     # group (df/ttf are doc-id-independent), then rebuild the global dict
     # the same way streaming appends do
-    src_partials = sorted(
-        glob.glob(os.path.join(src_dir, "terms_partial", "group=*"))
-    )
-    if src_partials:
-        agg_src = sum_term_partials(spark, src_partials)
-    else:  # a source whose reclaiming merge predates its one partial
-        agg_src = block_term_stats(spark.read.parquet(src_store("postings_dir", "postings")))
+    uncovered = postings_without_partials(src_dir, ms)
+    if uncovered:  # the source is read-only: its stats straight from postings
+        agg_src = block_term_stats(spark.read.parquet(*uncovered))
+    else:
+        agg_src = sum_term_partials(
+            spark, sorted(glob.glob(os.path.join(src_dir, "terms_partial", "group=*")))
+        )
     agg_src.write.mode("overwrite").parquet(
         os.path.join(dest_dir, "terms_partial", f"group={gimp}")
     )

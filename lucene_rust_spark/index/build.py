@@ -12,8 +12,11 @@ Spark mapping (SURVEY.md §3.2):
   parquet sorted by term      = blocktree/FST terms dict (row-group stats seek)
   manifest.json atomic rename = segments_N two-phase commit
 
-Everything stays JVM-side except three Arrow kernels: tokenize+count,
-SmallFloat norm quantization (inside the same kernel), and block packing.
+A group build is one Spark job: route docs by part, then one mapInArrow
+flush task per partition runs the DWPT kernel (tokenize+count, SmallFloat
+norm quantization, block packing) and writes its segments' store files
+with pyarrow, as a Lucene DWPT flushes its own segment. Term-range order
+across files is the merge's job (index/merge.py).
 """
 
 from __future__ import annotations
@@ -21,15 +24,8 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import time
-
-_DEBUG = bool(os.environ.get("LRS_BUILD_DEBUG"))
-
-
-def _dbg(label, t0):
-    if _DEBUG:
-        print(f"[build] {label}: {time.time()-t0:.1f}s", flush=True)
-    return time.time()
 
 import numpy as np
 import pandas as pd
@@ -41,11 +37,6 @@ from lucene_rust_spark.functions.analysis import tokenize_series, tokenize_spans
 from lucene_rust_spark.index.manifest import commit_manifest, read_manifest
 
 PARTITION_SHIFT = 40
-NORM_TERM = ""  # sentinel term for norm blocks riding the DWPT output
-                # (real terms are never empty: the tokenizer drops them)
-DOCMAP_TERM = "\x01docmap"  # sentinel rows carrying the doc map as an Arrow
-                            # IPC blob in docs_bin (tokens are \w+ runs, so
-                            # a control char can never collide with a term)
 
 # --- docID assignment -------------------------------------------------------
 
@@ -107,14 +98,6 @@ END"""
 
 
 # --- posting block packing (FOR blocks of 128; for_util.rs:1) ----------------
-
-_BLOCK_SCHEMA = (
-    "term string, seg int, block_no int, n int, first_doc long, last_doc long, "
-    "max_tf int, min_dlq int, sum_tf long, docs_bin binary, tfs_bin binary, "
-    "dlq_bin binary, pos_bin binary, offs_bin binary, olen_bin binary, "
-    "pay_bin binary, imp_tf array<int>, imp_dlq array<int>"
-)
-
 
 def block_impacts(tfs: np.ndarray, dlqs: np.ndarray) -> tuple[list[int], list[int]]:
     """Per-block competitive impacts (clt/codecs/mod.rs:5
@@ -547,18 +530,11 @@ def _sha256_arrow(arr) -> np.ndarray:
 
 
 def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filters=None, pfor=False, word_break="simple", offsets: bool = False, payload_fn=None, sort_key=None):
-    """mapInArrow kernel — the DocumentsWriterPerThread analog
-    (clt/index/mod.rs:33): this task holds complete segments (docs are
-    hash-routed by part), accumulates per-doc term counts across Arrow
-    batches, then sorts (term, seg, doc_id) ONCE in numpy and emits
-    FOR-packed block rows. Only packed blocks leave the task, so the
-    downstream shuffle carries ~n_postings/128 rows. Memory is bounded by
-    the segment size (num_partitions is the flush-by-RAM knob).
-
-    Norms ride the same output as NORM_TERM sentinel blocks (docs_bin =
-    packed doc deltas, tfs_bin = packed exact dl, dlq_bin = norm bytes):
-    one content pass produces postings AND norms, instead of a second
-    full-corpus tokenize just to count tokens.
+    """The DocumentsWriterPerThread analog (clt/index/mod.rs:33): this task
+    holds complete segments (docs are hash-routed by part), accumulates
+    per-doc term counts across Arrow batches, then sorts (term, seg,
+    doc_id) ONCE in numpy and packs FOR blocks. Memory is bounded by the
+    segment size (num_partitions is the flush-by-RAM knob).
 
     docIDs are assigned HERE: the task holds complete segments, so the
     per-part rank is local. RecordBatches arrive with (part, repo, path,
@@ -566,17 +542,22 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
     counted against task-local row ids and remapped once the task's
     ordering (the oracle's canonical (part[, content_len], repo, path,
     commit) — Python string order == Spark's UTF8_BINARY, content_len in
-    UTF-16 code units) is known. The doc map (doc_id, repo, path, commit,
-    lang, content_sha256) leaves the task as one DOCMAP_TERM sentinel row
-    holding an Arrow IPC blob, so ONE content pass and ONE (unsorted)
-    content shuffle produce postings + norms + docmap."""
+    UTF-16 code units) is known.
+
+    Returns None for a task without rows, else (postings, norms, docmap)
+    for its segments, straight from one content pass: postings is a
+    pandas frame of postings block rows in string (term, seg,
+    block_no) order, or None when no doc has a token; norms (doc_id, dl,
+    dlq) and docmap (doc_id, repo, path, commit, lang, content_sha256) are
+    Arrow tables in doc_id order, one row per doc, token-less ones
+    included."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     acc = []
     pos_acc = []
     ostart_acc, olen_acc, pay_acc = [], [], []
-    norm_docs, norm_parts, norm_dls = [], [], []
+    norm_parts, norm_dls = [], []
     vocab: dict = {}
     vocab_list: list = []
     row_base = 0
@@ -626,7 +607,6 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
                 stop_words=stop_words, char_filters=char_filters, word_break=word_break,
                 offsets=offsets, payload_fn=payload_fn,
             )
-        norm_docs.append(b_doc_ids)
         norm_parts.append(b_parts)
         norm_dls.append(dl_b)
         pos_acc.append(pos_b)
@@ -644,88 +624,50 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
             remap[j] = c
         acc.append((docs_b, segs_b, dlqs_b, remap[codes_b] if len(codes_b) else codes_b, tfs_b))
 
-    if row_base:
-        # the task holds complete segments: assign docIDs with the oracle's
-        # canonical ordering, then remap the task-local row ids everywhere
-        part_all = np.concatenate(norm_parts).astype(np.int64)
-        repo_all = np.concatenate(meta_repo)
-        path_all = np.concatenate(meta_path)
-        commit_all = np.concatenate(meta_commit)
-        lang_all = np.concatenate(meta_lang)
-        sha_all = np.concatenate(meta_sha)
-        keys = [commit_all, path_all, repo_all]
-        if sort_key == "content_len":
-            keys.append(np.concatenate(meta_clen))
-        keys.append(part_all)
-        order_a = np.lexsort(tuple(keys))
-        sp = part_all[order_a]
-        seg_starts = np.concatenate(([0], np.flatnonzero(np.diff(sp)) + 1))
-        seg_lens = np.diff(np.concatenate((seg_starts, [len(sp)])))
-        rank = np.arange(len(sp), dtype=np.int64) - np.repeat(seg_starts, seg_lens)
-        doc_map = np.empty(row_base, dtype=np.int64)
-        doc_map[order_a] = (sp << PARTITION_SHIFT) | rank
-        acc = [(doc_map[a0], a1, a2, a3, a4) for (a0, a1, a2, a3, a4) in acc]
-        norm_docs = [doc_map[x] for x in norm_docs]
-        dm = pa.record_batch(
-            {
-                "doc_id": pa.array(doc_map, type=pa.int64()),
-                "repo": pa.array(repo_all, type=pa.string()),
-                "path": pa.array(path_all, type=pa.string()),
-                "commit": pa.array(commit_all, type=pa.string()),
-                "lang": pa.array(lang_all, type=pa.string()),
-                "content_sha256": pa.array(sha_all, type=pa.string()),
-            }
-        )
-        sink = pa.BufferOutputStream()
-        with pa.ipc.new_stream(sink, dm.schema) as w:
-            w.write_batch(dm)
-        yield pd.DataFrame(
-            {
-                "term": [DOCMAP_TERM],
-                "seg": np.zeros(1, dtype=np.int32),
-                "block_no": np.zeros(1, dtype=np.int32),
-                "n": np.array([row_base], dtype=np.int32),
-                "first_doc": np.zeros(1, dtype=np.int64),
-                "last_doc": np.zeros(1, dtype=np.int64),
-                "max_tf": np.zeros(1, dtype=np.int32),
-                "min_dlq": np.zeros(1, dtype=np.int32),
-                "sum_tf": np.zeros(1, dtype=np.int64),
-                "docs_bin": [sink.getvalue().to_pybytes()],
-                "tfs_bin": [b""],
-                "dlq_bin": [b""],
-                "pos_bin": [b""],
-                "offs_bin": [b""],
-                "olen_bin": [b""],
-                "pay_bin": [b""],
-                "imp_tf": [[]],
-                "imp_dlq": [[]],
-            }
-        )
+    if not row_base:
+        return None
+    # the task holds complete segments: assign docIDs with the oracle's
+    # canonical ordering, then remap the task-local row ids everywhere
+    part_all = np.concatenate(norm_parts).astype(np.int64)
+    repo_all = np.concatenate(meta_repo)
+    path_all = np.concatenate(meta_path)
+    commit_all = np.concatenate(meta_commit)
+    keys = [commit_all, path_all, repo_all]
+    if sort_key == "content_len":
+        keys.append(np.concatenate(meta_clen))
+    keys.append(part_all)
+    order_a = np.lexsort(tuple(keys))
+    sp = part_all[order_a]
+    seg_starts = np.concatenate(([0], np.flatnonzero(np.diff(sp)) + 1))
+    seg_lens = np.diff(np.concatenate((seg_starts, [len(sp)])))
+    rank = np.arange(len(sp), dtype=np.int64) - np.repeat(seg_starts, seg_lens)
+    doc_map = np.empty(row_base, dtype=np.int64)
+    doc_map[order_a] = (sp << PARTITION_SHIFT) | rank
+    # part is the last (primary) lexsort key and rank counts up within
+    # it, so order_a is doc_id order
+    sorted_ids = doc_map[order_a]
+    docmap = pa.table(
+        {
+            "doc_id": pa.array(sorted_ids, type=pa.int64()),
+            "repo": pa.array(repo_all[order_a], type=pa.string()),
+            "path": pa.array(path_all[order_a], type=pa.string()),
+            "commit": pa.array(commit_all[order_a], type=pa.string()),
+            "lang": pa.array(np.concatenate(meta_lang)[order_a], type=pa.string()),
+            "content_sha256": pa.array(np.concatenate(meta_sha)[order_a], type=pa.string()),
+        }
+    )
+    dl = np.concatenate(norm_dls).astype(np.int64)[order_a]
+    norms = pa.table(
+        {
+            "doc_id": pa.array(sorted_ids, type=pa.int64()),
+            "dl": pa.array(dl.astype(np.int32)),
+            "dlq": pa.array(K.int_to_byte4(dl).astype(np.int32)),
+        }
+    )
 
-    # norm sentinel blocks — every doc, including token-less ones
-    nd = np.concatenate(norm_docs) if norm_docs else np.zeros(0, dtype=np.int64)
-    if len(nd):
-        npart = np.concatenate(norm_parts).astype(np.int64)
-        ndl = np.concatenate(norm_dls).astype(np.int64)
-        ndlq = K.int_to_byte4(ndl).astype(np.int64)
-        order_n = np.lexsort((nd, npart))
-        out = _pack_runs(
-            np.zeros(len(nd), dtype=np.int64)[order_n],
-            npart[order_n],
-            nd[order_n],
-            ndl[order_n],
-            ndlq[order_n],
-            term_values=np.asarray([NORM_TERM], dtype=object),
-            pfor=pfor,
-        )
-        if out is not None and len(out):
-            yield out
-
-    if not acc:
-        return
-    docs = np.concatenate([a[0] for a in acc])
+    docs = np.concatenate([doc_map[a[0]] for a in acc])
     if len(docs) == 0:
-        return
+        return None, norms, docmap
     # narrow dtypes (guide §2.3): codes/segs/tfs fit int32 and dlq is a
     # byte — halving the task's peak working set halves its first-touch
     # footprint on lazily-backed hosts (§2); _pack_runs widens locally
@@ -735,10 +677,15 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
     codes = np.concatenate([a[3] for a in acc]).astype(np.int32)
     tfs = np.concatenate([a[4] for a in acc]).astype(np.int32)
     del acc
-    # integer lexsort (term-code, seg, doc) — string order is applied later
-    # by the global term-range shuffle, so code order inside a task is fine
-    order = np.lexsort((docs, segs, codes))
+    # renumber term codes by string rank (Python str order == UTF-8 byte
+    # order, the parquet statistics' order), so one integer lexsort puts
+    # the blocks in the (term, seg, block_no) order the file is written in
     vocab_arr = np.asarray(vocab_list, dtype=object)
+    by_term = np.argsort(vocab_arr)
+    term_rank = np.empty(len(by_term), dtype=np.int32)
+    term_rank[by_term] = np.arange(len(by_term), dtype=np.int32)
+    codes = term_rank[codes]
+    order = np.lexsort((docs, segs, codes))
     pos_flat = pos_offsets = None
     off_start_flat = off_len_flat = pay_flat = None
     if positions:
@@ -759,55 +706,163 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
             off_len_flat = np.concatenate(olen_acc)[gather]
         if payload_fn is not None:
             pay_flat = np.concatenate(pay_acc)[gather]
-    out = _pack_runs(
+    postings = _pack_runs(
         codes[order], segs[order], docs[order], tfs[order], dlqs[order],
-        term_values=vocab_arr, pos_flat=pos_flat, pos_offsets=pos_offsets,
+        term_values=vocab_arr[by_term], pos_flat=pos_flat, pos_offsets=pos_offsets,
         pfor=pfor, off_start_flat=off_start_flat, off_len_flat=off_len_flat,
         pay_flat=pay_flat,
     )
-    if out is not None and len(out):
-        step = 65536
-        for i in range(0, len(out), step):
-            yield out.iloc[i : i + step]
+    return postings, norms, docmap
 
 
-def _block_pa_schema():
-    """Arrow schema matching _BLOCK_SCHEMA (mapInArrow output contract)."""
+# --- the flush: store files written by the build task -------------------------
+
+# postings rows per row group: each row group is term-sorted with term
+# min/max statistics, so a reader seeks within a file that spans the
+# task's whole vocabulary (search/block_reader.py, Spark's row-group filter)
+POSTINGS_ROW_GROUP_ROWS = 1 << 16
+
+
+def _store_schemas() -> dict:
+    """Arrow schemas of the four stores a flush writes; the postings one
+    is also the merge's block schema."""
     import pyarrow as pa
 
-    return pa.schema(
-        [
-            ("term", pa.string()),
-            ("seg", pa.int32()),
-            ("block_no", pa.int32()),
-            ("n", pa.int32()),
-            ("first_doc", pa.int64()),
-            ("last_doc", pa.int64()),
-            ("max_tf", pa.int32()),
-            ("min_dlq", pa.int32()),
-            ("sum_tf", pa.int64()),
-            ("docs_bin", pa.binary()),
-            ("tfs_bin", pa.binary()),
-            ("dlq_bin", pa.binary()),
-            ("pos_bin", pa.binary()),
-            ("offs_bin", pa.binary()),
-            ("olen_bin", pa.binary()),
-            ("pay_bin", pa.binary()),
-            ("imp_tf", pa.list_(pa.int32())),
-            ("imp_dlq", pa.list_(pa.int32())),
-        ]
+    return {
+        "postings": pa.schema(
+            [
+                ("term", pa.string()),
+                ("seg", pa.int32()),
+                ("block_no", pa.int32()),
+                ("n", pa.int32()),
+                ("first_doc", pa.int64()),
+                ("last_doc", pa.int64()),
+                ("max_tf", pa.int32()),
+                ("min_dlq", pa.int32()),
+                ("sum_tf", pa.int64()),
+                ("docs_bin", pa.binary()),
+                ("tfs_bin", pa.binary()),
+                ("dlq_bin", pa.binary()),
+                ("pos_bin", pa.binary()),
+                ("offs_bin", pa.binary()),
+                ("olen_bin", pa.binary()),
+                ("pay_bin", pa.binary()),
+                ("imp_tf", pa.list_(pa.int32())),
+                ("imp_dlq", pa.list_(pa.int32())),
+            ]
+        ),
+        "norms": pa.schema([("doc_id", pa.int64()), ("dl", pa.int32()), ("dlq", pa.int32())]),
+        "docmap": pa.schema(
+            [("doc_id", pa.int64())]
+            + [(c, pa.string()) for c in ("repo", "path", "commit", "lang", "content_sha256")]
+        ),
+        "terms_partial": pa.schema(
+            [("term", pa.string()), ("doc_freq", pa.int64()),
+             ("total_term_freq", pa.int64()), ("n_blocks", pa.int64())]
+        ),
+    }
+
+
+# pyarrow write options per store (snappy, Spark's codec too). Statistics
+# only where a reader filters; dictionaries where values repeat (most
+# postings blocks hold one doc, so even their binary columns do), never
+# on the unique docmap strings
+_WRITE_OPTS = {
+    "postings": dict(
+        row_group_size=POSTINGS_ROW_GROUP_ROWS,
+        write_statistics=["term", "seg", "block_no", "first_doc", "last_doc"],
+    ),
+    "norms": dict(use_dictionary=["dlq"], write_statistics=["doc_id"]),
+    "docmap": dict(use_dictionary=["repo", "lang"], write_statistics=["doc_id"]),
+    "terms_partial": dict(
+        use_dictionary=["doc_freq", "total_term_freq", "n_blocks"], write_statistics=["term"]
+    ),
+}
+
+
+def _write_store(table, store: str, path: str, attempt: int) -> int:
+    """Write one store file under a per-attempt temp name (a dot file:
+    Spark's reader and the commit snapshot skip it), rename it into place
+    and return its size — a retried or speculative attempt replaces the
+    file whole."""
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.{attempt}.tmp")
+    pq.write_table(table, tmp, compression="snappy", store_schema=False, **_WRITE_OPTS[store])
+    os.replace(tmp, path)
+    return os.path.getsize(path)
+
+
+def _term_partial(blocks):
+    """(term, doc_freq, total_term_freq, n_blocks) of a task's postings
+    table, term-sorted — block_term_stats computed in the flush task."""
+    import pyarrow as pa
+
+    agg = blocks.group_by("term").aggregate(
+        [("n", "sum"), ("sum_tf", "sum"), ("n", "count")]
+    ).sort_by("term")
+    return pa.table(
+        [agg["term"], agg["n_sum"].cast(pa.int64()), agg["sum_tf_sum"], agg["n_count"]],
+        schema=_store_schemas()["terms_partial"],
     )
 
 
-def _dwpt_partition_arrow(batches, **kw):
-    """mapInArrow wrapper for _dwpt_partition: RecordBatches in (content
-    never materialized as Python strings on the fast path), RecordBatches
-    out."""
+def _flush_partition(batches, dirs: dict, **kernel_kw):
+    """mapInArrow task of a group build — the DWPT flush: run the kernel
+    over this task's complete segments and write their store files
+    itself, one file per store (dirs: store -> group dir) named by the
+    partition id. Yields one row per segment (seg, max_doc,
+    doc_base, sum_ttf, sha_xor) and one per written file (store, rows,
+    bytes)."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    out = _dwpt_partition(batches, **kernel_kw)
+    if out is None:
+        return
+    postings, norms, docmap = out
+    schemas = _store_schemas()
+    tables = {"norms": norms, "docmap": docmap}
+    if postings is not None:
+        blocks = pa.Table.from_pandas(postings, schema=schemas["postings"], preserve_index=False)
+        tables["postings"] = blocks
+        tables["terms_partial"] = _term_partial(blocks)
+    ctx = TaskContext.get()
+    name = f"part-{ctx.partitionId():05d}.parquet"
+    rows = [
+        {"store": store, "rows": t.num_rows,
+         "bytes": _write_store(t, store, os.path.join(dirs[store], name), ctx.taskAttemptId())}
+        for store, t in tables.items()
+    ]
+    # per-segment stats: docs are in doc_id order, so segments are runs
+    ids = norms.column("doc_id").to_numpy()
+    seg = ids >> PARTITION_SHIFT
+    starts = np.concatenate(([0], np.flatnonzero(np.diff(seg)) + 1))
+    sha = np.fromiter(
+        (int(h[:15], 16) if h else 0 for h in docmap.column("content_sha256").to_pylist()),
+        dtype=np.int64, count=len(ids),
+    )
+    counts = np.diff(np.concatenate((starts, [len(ids)])))
+    ttf = np.add.reduceat(norms.column("dl").to_numpy().astype(np.int64), starts)
+    xor = np.bitwise_xor.reduceat(sha, starts)
+    rows += [
+        {"seg": int(seg[s]), "max_doc": int(c), "doc_base": int(ids[s]),
+         "sum_ttf": int(t), "sha_xor": int(x)}
+        for s, c, t, x in zip(starts, counts, ttf, xor)
+    ]
+    yield pa.RecordBatch.from_pylist(rows, schema=_flush_pa_schema())
+
+
+def _flush_pa_schema():
+    """A flush task's output rows: one per segment (store NULL), one per
+    written file (seg NULL)."""
     import pyarrow as pa
 
-    schema = _block_pa_schema()
-    for out in _dwpt_partition(batches, **kw):
-        yield pa.RecordBatch.from_pandas(out, schema=schema, preserve_index=False)
+    return pa.schema(
+        [("seg", pa.int32()), ("max_doc", pa.int64()), ("doc_base", pa.int64()),
+         ("sum_ttf", pa.int64()), ("sha_xor", pa.int64()), ("store", pa.string()),
+         ("rows", pa.int64()), ("bytes", pa.int64())]
+    )
 
 
 # --- build -------------------------------------------------------------------
@@ -890,11 +945,11 @@ def _staged_group(spark: SparkSession, out_dir: str, g: int) -> DataFrame | None
     return spark.read.parquet(*paths)
 
 
-def block_term_stats(blocks: DataFrame) -> DataFrame:
-    """(term, doc_freq, total_term_freq, n_blocks) from postings block
-    rows' metadata (n, sum_tf) — no decode. The map side of the terms
-    dict: a group's partial, or the whole dict of merged postings."""
-    return blocks.groupBy("term").agg(
+def block_term_stats(blocks: DataFrame, *by: str) -> DataFrame:
+    """(*by, term, doc_freq, total_term_freq, n_blocks) from postings
+    block rows' metadata (n, sum_tf) — no decode. The map side of the
+    terms dict: a group's partial, or the whole dict of merged postings."""
+    return blocks.groupBy(*by, "term").agg(
         F.sum("n").cast("long").alias("doc_freq"),
         F.sum("sum_tf").cast("long").alias("total_term_freq"),
         F.count("*").cast("long").alias("n_blocks"),
@@ -910,6 +965,40 @@ def sum_term_partials(spark: SparkSession, partial_dirs: list) -> DataFrame:
         F.sum("total_term_freq").cast("long").alias("total_term_freq"),
         F.sum("n_blocks").cast("long").alias("n_blocks"),
     )
+
+
+def postings_without_partials(index_dir: str, m: dict) -> list[str]:
+    """The committed postings files of manifest m when one of their
+    group=G dirs has no terms_partial/group=G, else []. An index whose
+    last reclaiming merge ran under older code has no partial at all
+    (that merge deleted them), and summing the partials that later
+    writers add would give a terms dict of only their docs."""
+    from lucene_rust_spark.index.manifest import committed_files, store_dirs
+
+    files = committed_files(index_dir, m, store_dirs(m)["postings_dir"])
+    groups = {os.path.relpath(f, index_dir).split(os.sep)[1] for f in files}
+    partials = os.path.join(index_dir, "terms_partial")
+    if all(os.path.isdir(os.path.join(partials, g)) for g in groups):
+        return []
+    return files
+
+
+def ensure_term_partials(spark: SparkSession, index_dir: str, m: dict) -> None:
+    """Give every committed postings group of manifest m a terms partial
+    before a writer sums them. When one is missing
+    (postings_without_partials), every partial is rewritten from the
+    committed postings' block metadata, one per postings group dir, so
+    the partials count each posting exactly once."""
+    from lucene_rust_spark.index.manifest import store_dirs
+
+    files = postings_without_partials(index_dir, m)
+    if not files:
+        return
+    root = os.path.join(index_dir, "terms_partial")
+    shutil.rmtree(root, ignore_errors=True)
+    base = os.path.join(index_dir, store_dirs(m)["postings_dir"])
+    blocks = spark.read.option("basePath", base).parquet(*files)
+    block_term_stats(blocks, "group").write.partitionBy("group").parquet(root)
 
 
 def write_terms_dict(agg: DataFrame, out_path: str, n_range_parts: int) -> None:
@@ -991,11 +1080,14 @@ def build_index(
     # from num_partitions (the logical segment count) so CPU-bound kernel
     # stages always use every core regardless of AQE coalescing
     width = shuffle_width or spark.sparkContext.defaultParallelism
+    metrics = {"op": "build"}
     if num_groups > 1:
         # staging pays for itself by making every group job read only its
         # 1/G slice; with a single group it would be a pure extra
         # write+read of the corpus, so the group job scans source directly
+        t0 = time.perf_counter()
         stage_corpus(spark, source, out_dir, num_partitions, num_groups, resume=resume)
+        metrics["stage_s"] = round(time.perf_counter() - t0, 3)
         src_for_groups = None
     else:
         src_for_groups = (
@@ -1016,15 +1108,19 @@ def build_index(
     # clt/index/ordinal_map.rs): merge the per-group partials — the
     # postings-sized map side ran INSIDE each (parallel) group job, so
     # this serial tail is only O(vocab × groups), not O(postings)
-    t_terms = time.time()
-    # every group job that has docs wrote its partial
+    t0 = time.perf_counter()
+    # every group job wrote its partial
     partial_dirs = sorted(glob.glob(os.path.join(out_dir, "terms_partial", "group=*")))
     write_terms_dict(
         sum_term_partials(spark, partial_dirs),
         os.path.join(out_dir, "terms"),
         max(1, min(num_partitions // 8, 64)),
     )
-    _dbg("terms", t_terms)
+    metrics["terms_dict_s"] = round(time.perf_counter() - t0, 3)
+    # flush_s and the per-store files/rows/bytes sum the group checkpoints
+    # (a resumed group reports its original flush)
+    metrics["flush_s"] = round(sum(gs.get("flush_s", 0.0) for gs in group_stats), 3)
+    metrics["stores"] = _sum_stores(gs.get("stores", {}) for gs in group_stats)
 
     doc_count = sum(gs["doc_count"] for gs in group_stats)
     sum_ttf = sum(gs["sum_ttf"] for gs in group_stats)
@@ -1050,6 +1146,7 @@ def build_index(
         "build_wall_sec": round(time.time() - t_start, 3),
         "generation": _next_generation(out_dir),
         "files": ["postings", "norms", "docmap", "terms"],
+        "metrics": metrics,
     }
     commit_manifest(out_dir, manifest)
     if cleanup_staged:
@@ -1123,41 +1220,6 @@ def build_group_job(
     return gs
 
 
-def _unpack_docmap_blocks(batches):
-    """DOCMAP_TERM sentinel rows → docmap RecordBatches (inverse of the
-    DWPT kernel's Arrow IPC serialization)."""
-    import pyarrow as pa
-
-    for rb in batches:
-        col = rb.column("docs_bin")
-        for i in range(len(col)):
-            with pa.ipc.open_stream(col[i].as_py()) as reader:
-                yield from reader
-
-
-def _unpack_norm_blocks(batches):
-    """Sentinel norm blocks → (doc_id, dl, dlq) rows."""
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        ns = pdf["n"].to_numpy(np.int64)
-        docs_dec = K.for_unpack_batch(list(pdf["docs_bin"]), ns)
-        dl_dec = K.for_unpack_batch(list(pdf["tfs_bin"]), ns)
-        doc_parts, dl_parts, dlq_parts = [], [], []
-        for ri, (fd, qb) in enumerate(zip(pdf["first_doc"], pdf["dlq_bin"])):
-            docs = np.int64(fd) + np.cumsum(docs_dec[ri]).astype(np.int64)
-            doc_parts.append(docs)
-            dl_parts.append(dl_dec[ri].astype(np.int32))
-            dlq_parts.append(np.frombuffer(bytes(qb), dtype=np.uint8).astype(np.int32))
-        yield pd.DataFrame(
-            {
-                "doc_id": np.concatenate(doc_parts),
-                "dl": np.concatenate(dl_parts),
-                "dlq": np.concatenate(dlq_parts),
-            }
-        )
-
-
 def _build_group(
     docs_with_part: DataFrame, out_dir: str, g: int, num_groups: int, width: int,
     positions: bool = False,
@@ -1168,142 +1230,93 @@ def _build_group(
     norms_dirname: str = "norms", docmap_dirname: str = "docmap",
 ) -> dict:
     """Build one checkpoint group from its (pre-filtered) slice of the
-    corpus. The slice's content is read EXACTLY ONCE: it is hash-shuffled
-    by part (no sort) straight into the DWPT kernel, which assigns docIDs
-    locally (it holds complete segments) and emits postings, sentinel norm
-    blocks and the doc map in one pass; the doc map reuses the staged
-    per-row sha256 when present. postings_dirname routes the postings
-    write into the index's CURRENT postings generation (streaming appends
-    after a merge compaction)."""
-    spark = docs_with_part.sparkSession
+    corpus in ONE Spark job: the slice's content is hash-shuffled by part
+    (no sort) straight into the flush tasks (_flush_partition), each of
+    which holds complete segments, assigns their docIDs and writes their
+    postings, norms, docmap and terms partial files itself; the driver
+    collects one small row per segment and per file. The doc map reuses
+    the staged per-row sha256 when present. The *_dirname arguments route
+    the writes into the index's CURRENT store generations (merge
+    compactions move stores to *_gN dirs; appends land beside them)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    def gdir(name: str) -> str:
-        # route writes into the index's CURRENT store generations (merge
-        # compactions move postings/norms/docmap to *_gN dirs; appends
-        # must land beside them, not in the superseded originals)
-        name = {"postings": postings_dirname, "norms": norms_dirname,
-                "docmap": docmap_dirname}.get(name, name)
-        return os.path.join(out_dir, name, f"group={g}")
+    from lucene_rust_spark.functions.analysis import resolve_payload_fn
 
-    t = time.time()
-    # ONE content shuffle (hash by part, no sort): each task holds
-    # complete segments; the kernel assigns docIDs and emits postings,
-    # norms AND the doc map in a single pass over the content
+    names = {"postings": postings_dirname, "norms": norms_dirname,
+             "docmap": docmap_dirname, "terms_partial": "terms_partial"}
+    dirs = {k: os.path.join(out_dir, v, f"group={g}") for k, v in names.items()}
+    # the group's files are replaced whole, as write.mode("overwrite") did:
+    # an interrupted attempt's part or temp files must not survive a rerun
+    for d in dirs.values():
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
     cols = ["part", "repo", "path", "commit", "lang", "content"]
     if "content_sha256" in docs_with_part.columns:
         cols.append("content_sha256")
     routed = docs_with_part.select(*cols).repartition(width, "part")
+    kernel_kw = dict(
+        positions=positions,
+        stop_words=frozenset(stop_words) if stop_words else None,
+        char_filters=tuple(tuple(c) for c in char_filters) if char_filters else None,
+        pfor=(codec == "pfor"), word_break=word_break, offsets=offsets,
+        payload_fn=resolve_payload_fn(payloads)[0], sort_key=sort_key,
+    )
 
-    sw = frozenset(stop_words) if stop_words else None
-    cf = tuple(tuple(c) for c in char_filters) if char_filters else None
+    def flush(batches, _dirs=dirs, _kw=kernel_kw):
+        return _flush_partition(batches, _dirs, **_kw)
 
-    from lucene_rust_spark.functions.analysis import resolve_payload_fn
-
-    pfn, _ = resolve_payload_fn(payloads)
-
-    def dwpt(batches, _p=positions, _sw=sw, _cf=cf, _pf=(codec == "pfor"), _wb=word_break, _of=offsets, _pl=pfn, _sk=sort_key):
-        return _dwpt_partition_arrow(
-            batches, positions=_p, stop_words=_sw, char_filters=_cf, pfor=_pf,
-            word_break=_wb, offsets=_of, payload_fn=_pl, sort_key=_sk,
+    t0 = time.perf_counter()
+    rows = routed.mapInArrow(flush, schema=from_arrow_schema(_flush_pa_schema())).collect()
+    stores = {k: {"files": 0, "rows": 0, "bytes": 0} for k in dirs}
+    segments = []
+    for r in rows:
+        if r["store"] is not None:
+            st = stores[r["store"]]
+            st["files"] += 1
+            st["rows"] += r["rows"]
+            st["bytes"] += r["bytes"]
+            continue
+        segments.append(
+            {
+                "seg": r["seg"],
+                "max_doc": r["max_doc"],
+                "sum_ttf": r["sum_ttf"],
+                "doc_base": r["doc_base"],
+                "del_count": 0,
+                "content_sha256_xor": format(r["sha_xor"] & 0xFFFFFFFFFFFFFFFF, "016x"),
+                "group": g,
+            }
         )
-
-    # persist before repartitionByRange: the range sampling pass would
-    # otherwise re-run the whole DWPT kernel a second time
-    blocks = routed.mapInArrow(dwpt, schema=_BLOCK_SCHEMA).persist()
-    if _DEBUG:
-        blocks.count()
-        t = _dbg("dwpt kernel (materialize)", t)
-    # postings: packed blocks → ONE shuffle of block rows into global
-    # term-range order (the hierarchical merge: Spark's range shuffle IS
-    # the k-way term merge, SURVEY.md §2.3)
-    sentinel = F.col("term").isin([NORM_TERM, DOCMAP_TERM])
-    (
-        blocks.filter(~sentinel)
-        .repartitionByRange(width, "term")
-        .sortWithinPartitions("term", "seg", "block_no")
-        .write.mode("overwrite")
-        .parquet(gdir("postings"))
-    )
-    if _DEBUG:
-        t = _dbg("postings shuffle+write", t)
-    # doc map: deserialize the kernel's IPC sentinel rows and lay out
-    # by docID range (metadata-only shuffle)
-    (
-        blocks.filter(F.col("term") == DOCMAP_TERM)
-        .select("docs_bin")
-        .mapInArrow(
-            _unpack_docmap_blocks,
-            schema="doc_id long, repo string, path string, commit string,"
-            " lang string, content_sha256 string",
-        )
-        .repartitionByRange(max(1, width // 4), "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(gdir("docmap"))
-    )
-    if _DEBUG:
-        t = _dbg("docmap write", t)
-    # per-group terms partial (map side of the global dictionary agg,
-    # computed here so it parallelizes across group builders and the
-    # finalize tail only merges vocab-sized partials)
-    block_term_stats(blocks.filter(~sentinel)).write.mode("overwrite").parquet(
-        gdir("terms_partial")
-    )
-    if _DEBUG:
-        t = _dbg("terms_partial", t)
-    norm_blocks = blocks.filter(F.col("term") == NORM_TERM)
-    (
-        norm_blocks.select("n", "first_doc", "docs_bin", "tfs_bin", "dlq_bin")
-        .mapInPandas(_unpack_norm_blocks, schema="doc_id long, dl int, dlq int")
-        .repartitionByRange(max(1, width // 4), "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(gdir("norms"))
-    )
-    if _DEBUG:
-        t = _dbg("norms write", t)
-    # per-segment total term freq straight from block metadata
-    seg_ttf = {
-        int(r["seg"]): int(r["ttf"])
-        for r in norm_blocks.groupBy("seg").agg(F.sum("sum_tf").alias("ttf")).collect()
-    }
-    blocks.unpersist()
-    t = _dbg("postings+norms", t)
-
-    # the written docmap is KB-per-group metadata; part = docID high bits
-    seg_rows = (
-        spark.read.parquet(gdir("docmap"))
-        .withColumn("part", F.shiftright("doc_id", PARTITION_SHIFT))
-        .groupBy("part")
-        .agg(
-            F.count("*").alias("max_doc"),
-            F.min("doc_id").alias("doc_base"),
-            F.bit_xor(F.conv(F.substring("content_sha256", 1, 15), 16, 10).cast("long")).alias(
-                "sha_xor"
-            ),
-        )
-        .collect()
-    )
-    t = _dbg("seg_stats", t)
-    segments = [
-        {
-            "seg": int(r["part"]),
-            "max_doc": int(r["max_doc"]),
-            "sum_ttf": seg_ttf.get(int(r["part"]), 0),
-            "doc_base": int(r["doc_base"]),
-            "del_count": 0,
-            "content_sha256_xor": format(int(r["sha_xor"]) & 0xFFFFFFFFFFFFFFFF, "016x"),
-            "group": g,
-        }
-        for r in sorted(seg_rows, key=lambda r: r["part"])
-    ]
+    # a store no task wrote (no docs, or no tokens) gets one empty file,
+    # as Spark's empty write did, so every group dir stays readable
+    schemas = _store_schemas()
+    for k, st in stores.items():
+        if not st["files"]:
+            st["files"] = 1
+            st["bytes"] = _write_store(
+                schemas[k].empty_table(), k, os.path.join(dirs[k], "part-00000.parquet"), 0
+            )
+    segments.sort(key=lambda s: s["seg"])
     return {
         "group": g,
         "doc_count": sum(s["max_doc"] for s in segments),
         "sum_ttf": sum(s["sum_ttf"] for s in segments),
         "segments": segments,
         "content_sha256_xor": _xor_hexes(s["content_sha256_xor"] for s in segments),
+        "flush_s": round(time.perf_counter() - t0, 3),
+        "stores": stores,
     }
+
+
+def _sum_stores(per_group) -> dict:
+    """Sum per-store {files, rows, bytes} counts over groups' flush stats."""
+    out: dict = {}
+    for stores in per_group:
+        for k, st in stores.items():
+            acc = out.setdefault(k, {"files": 0, "rows": 0, "bytes": 0})
+            for f in acc:
+                acc[f] += st[f]
+    return out
 
 
 def _payload_name(payloads) -> str | None:

@@ -24,6 +24,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import time
 
 
 MANIFEST_NAME = "manifest.json"
@@ -71,7 +72,14 @@ def prepare_commit(out_dir: str, manifest: dict) -> int:
     prepared generation."""
     os.makedirs(out_dir, exist_ok=True)
     manifest = dict(manifest)
+    t0 = time.perf_counter()
     manifest.update(_snapshot_files(out_dir, manifest))
+    metrics = manifest.get("metrics")
+    if metrics is not None and "commit_s" not in metrics:
+        # the writer's own phase timings (a copied manifest's already hold
+        # theirs): the snapshot is the commit's O(files) step; the two
+        # small fsync'd writes after it cannot time themselves
+        manifest["metrics"] = {**metrics, "commit_s": round(time.perf_counter() - t0, 4)}
     gen = int(manifest["generation"])
     pending = os.path.join(out_dir, f"{PENDING_PREFIX}{gen}")
     with open(pending, "w") as f:
@@ -154,15 +162,29 @@ def read_commit(out_dir: str, generation: int) -> dict | None:
     return None
 
 
+def committed_files(out_dir: str, manifest: dict, dirname: str) -> list[str]:
+    """Absolute parquet paths of one store dir in this manifest's view:
+    the stamped `store_files`, else (legacy manifests) a glob."""
+    stamped = (manifest.get("store_files") or {}).get(dirname)
+    if stamped:
+        return [os.path.join(out_dir, r) for r in stamped]
+    return sorted(
+        glob.glob(os.path.join(out_dir, dirname, "**", "*.parquet"), recursive=True)
+    )
+
+
 def check_index(out_dir: str, spark) -> dict:
     """CheckIndex analog (clt/index/mod.rs:12): validate manifest invariants
-    against the stored parquet. Returns a dict of checked facts; raises on
-    violation."""
+    against the stored parquet — the live generation's committed files,
+    wherever merges and appends moved its stores. Returns a dict of
+    checked facts; raises on violation."""
     m = read_manifest(out_dir)
     assert m is not None, "no manifest"
-    norms = spark.read.parquet(os.path.join(out_dir, "norms"))
-    docmap = spark.read.parquet(os.path.join(out_dir, "docmap"))
-    postings = spark.read.parquet(os.path.join(out_dir, "postings"))
+    dirs = store_dirs(m)
+    norms, docmap, postings = (
+        spark.read.parquet(*committed_files(out_dir, m, dirs[k]))
+        for k in ("norms_dir", "docmap_dir", "postings_dir")
+    )
     n_norms = norms.count()
     n_docs = docmap.count()
     assert n_norms == m["doc_count"], (n_norms, m["doc_count"])

@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 
 from lucene_rust_spark.functions import kernels as K
 from lucene_rust_spark.index.build import (
-    _BLOCK_SCHEMA,
     _pack_runs,
+    _store_schemas,
     block_term_stats,
     write_terms_dict,
 )
@@ -295,6 +295,9 @@ def merge_segments(
         passthrough_msegs = [
             g for g in passthrough_msegs if not (live_by_mseg.get(g, set()) & tomb_segs)
         ]
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    block_schema = from_arrow_schema(_store_schemas()["postings"])
     # repartitionByRange's sampling pass would otherwise scan the postings
     # parquet a second time; one cached pass feeds both the sampler and
     # the shuffle (released right after the write)
@@ -308,13 +311,13 @@ def merge_segments(
         pt_cond = F.col("mseg").isin(passthrough_msegs)
         passthrough = keyed.filter(pt_cond).withColumn(
             "seg", F.col("mseg")
-        ).select(*[f.split(" ")[0] for f in _BLOCK_SCHEMA.split(", ")])
+        ).select(*block_schema.names)
         to_repack = keyed.filter(~pt_cond)
     merged = (
         to_repack.repartitionByRange(width, "term")
         .sortWithinPartitions("term", "mseg", "seg", "block_no")
         .select(*cols)
-        .mapInPandas(repack, schema=_BLOCK_SCHEMA)
+        .mapInPandas(repack, schema=block_schema)
     )
     if passthrough is not None:
         merged = merged.unionByName(passthrough)

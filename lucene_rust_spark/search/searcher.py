@@ -42,7 +42,7 @@ from pyspark.sql import types as T
 
 from lucene_rust_spark.functions import kernels as K
 from lucene_rust_spark.functions.similarities import BM25, get_similarity
-from lucene_rust_spark.index.manifest import read_manifest
+from lucene_rust_spark.index.manifest import committed_files, read_manifest
 from lucene_rust_spark.oracle.bm25 import query_terms
 from lucene_rust_spark.search.rewrite import (
     CONSTANT_SCORE_TYPES,
@@ -473,22 +473,10 @@ class IndexSearcher:
         path = os.path.join(self.index_dir, dirname)
         if not self.pin_files:
             return self.spark.read.parquet(path)
-        files = self._store_files(dirname)
+        files = committed_files(self.index_dir, self.manifest, dirname)
         if not files:
             return self.spark.read.parquet(path)
         return self.spark.read.option("basePath", path).parquet(*files)
-
-    def _store_files(self, dirname: str) -> list[str]:
-        """One store dir's parquet files in this view: the manifest's
-        stamped `store_files`, else (legacy manifests) a glob."""
-        stamped = (self.manifest.get("store_files") or {}).get(dirname)
-        if stamped:
-            return [os.path.join(self.index_dir, r) for r in stamped]
-        import glob as _glob
-
-        return sorted(
-            _glob.glob(os.path.join(self.index_dir, dirname, "**", "*.parquet"), recursive=True)
-        )
 
     def close(self) -> None:
         """Release this reader's executor-memory footprint (persisted
@@ -1548,7 +1536,9 @@ class IndexSearcher:
             # absolute: a worker's cwd need not be the driver's
             files = [
                 os.path.abspath(f)
-                for f in self._store_files(self.manifest.get("postings_dir", "postings"))
+                for f in committed_files(
+                    self.index_dir, self.manifest, self.manifest.get("postings_dir", "postings")
+                )
             ]
             fn = functools.partial(_reader_task, files=files, sim=self.sim, tomb=tomb)
             self._reader = (OneTaskJob(sc, fn), tomb)

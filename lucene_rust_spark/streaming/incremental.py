@@ -12,6 +12,7 @@ idempotent per epoch — an epoch replay overwrites its own group dir)."""
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,6 +20,7 @@ from pyspark.sql import functions as F
 from lucene_rust_spark.index.build import (
     PARTITION_SHIFT,
     _build_group,
+    ensure_term_partials,
     reject_null_metadata,
     sum_term_partials,
     with_partition,
@@ -65,6 +67,9 @@ def append_batch(
             "register_payload_fn(name, fn) at build time so appends can "
             "resolve it, or rebuild with a named fn"
         )
+    # before this batch writes its own partial: an index whose partials
+    # an older reclaiming merge deleted gets them back from its postings
+    ensure_term_partials(spark, index_dir, m)
     gs = _build_group(
         docs, index_dir, g, 1, width,
         positions=bool(m.get("positions")),
@@ -102,12 +107,19 @@ def append_batch(
     terms_dir = f"terms_g{manifest['generation']}"
     import glob as _glob
 
+    t0 = time.perf_counter()
     partial_dirs = sorted(_glob.glob(os.path.join(index_dir, "terms_partial", "group=*")))
     agg = sum_term_partials(spark, partial_dirs)
     # same ordinal-bearing writer as build finalize: built and appended
     # dicts keep one schema and the dense-ordinal invariant survives appends
     write_terms_dict(agg, os.path.join(index_dir, terms_dir), max(1, width // 8))
     manifest["terms_dir"] = terms_dir
+    manifest["metrics"] = {
+        "op": "append",
+        "flush_s": gs["flush_s"],
+        "terms_dict_s": round(time.perf_counter() - t0, 3),
+        "stores": gs["stores"],
+    }
     commit_manifest(index_dir, manifest)
     return manifest
 

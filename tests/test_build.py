@@ -450,3 +450,180 @@ def test_null_metadata_rejected_up_front(spark, tmp_path, col):
         build_index(spark, good, str(out), num_partitions=2)
         with pytest.raises(ValueError, match="'repo'"):
             append_batch(spark, src, str(out), epoch=0, num_partitions=2)
+
+
+STORES = ("postings", "norms", "docmap", "terms_partial")
+
+
+def _rows(spark, path, cols=None):
+    df = spark.read.parquet(path)
+    df = df.select(*(cols or [c for c in df.columns if c != "group"]))
+    return sorted(map(tuple, df.collect()))
+
+
+def test_unmerged_postings_files_span_vocabulary(spark, t1_index):
+    """A fresh build writes one file per store per flush task, so each
+    postings file spans its task's whole vocabulary. Every postings row
+    group is in (term, seg, block_no) order and carries term min/max
+    statistics (what block_reader and Spark's row-group filter seek on)."""
+    import pyarrow.parquet as pq
+
+    from lucene_rust_spark.index.manifest import committed_files, read_manifest
+
+    out, _ = t1_index
+    m = read_manifest(out)
+    for store in ("postings", "norms", "docmap"):
+        assert len(committed_files(out, m, store)) >= 2, store
+    assert len(glob.glob(os.path.join(out, "terms_partial", "group=0", "*.parquet"))) >= 2
+    ranges = []
+    for f in committed_files(out, m, "postings"):
+        pf = pq.ParquetFile(f)
+        col = pf.schema_arrow.get_field_index("term")
+        for i in range(pf.metadata.num_row_groups):
+            st = pf.metadata.row_group(i).column(col).statistics
+            assert st is not None and st.has_min_max, (f, i)
+            t = pf.read_row_group(i, columns=["term", "seg", "block_no"])
+            keys = list(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+            assert keys == sorted(keys), (f, i)
+            assert (st.min, st.max) == (keys[0][0], keys[-1][0]), (f, i)
+            ranges.append((st.min, st.max))
+    # the files' term ranges all overlap: none is a term-range slice
+    assert max(lo for lo, _ in ranges) < min(hi for _, hi in ranges)
+
+
+def test_build_metrics_add_up(spark, t1_index):
+    """manifest["metrics"] holds the build's phase timings and, from the
+    flush rows, per-store files, rows and bytes: docmap and norms rows
+    add up to doc_count, postings rows to the committed block rows, and
+    bytes to the committed file sizes."""
+    from lucene_rust_spark.index.manifest import committed_files, read_manifest
+
+    out, _ = t1_index
+    m = read_manifest(out)
+    mt = m["metrics"]
+    assert mt["op"] == "build"
+    for k in ("flush_s", "terms_dict_s", "commit_s"):
+        assert mt[k] >= 0, k
+    st = mt["stores"]
+    assert st["norms"]["rows"] == st["docmap"]["rows"] == m["doc_count"]
+    assert st["postings"]["rows"] == spark.read.parquet(os.path.join(out, "postings")).count()
+    for store in ("postings", "norms", "docmap"):
+        files = committed_files(out, m, store)
+        assert st[store]["files"] == len(files), store
+        assert st[store]["bytes"] == sum(os.path.getsize(f) for f in files), store
+    partials = glob.glob(os.path.join(out, "terms_partial", "**", "*.parquet"), recursive=True)
+    assert st["terms_partial"]["bytes"] == sum(os.path.getsize(f) for f in partials)
+    assert st["terms_partial"]["rows"] == spark.read.parquet(*partials).count()
+
+
+def test_resume_after_interrupted_flush(spark, tmp_path):
+    """What an interrupted flush of group 1 leaves — no group checkpoint,
+    an earlier attempt's extra part file and a temp file in every store
+    dir, no manifest — does not survive build_index(resume=True): its
+    stores are row-identical to a clean build's and CheckIndex passes."""
+    import shutil
+
+    from lucene_rust_spark.corpus import gen_corpus_spark
+    from lucene_rust_spark.index.build import build_index
+    from lucene_rust_spark.index.manifest import check_index
+
+    src = gen_corpus_spark(spark, 300, 4)
+    ref = str(tmp_path / "ref")
+    build_index(spark, src, ref, num_partitions=4, num_groups=2)
+    out = str(tmp_path / "idx")
+    build_index(spark, src, out, num_partitions=4, num_groups=2, resume=False)
+    os.remove(os.path.join(out, "checkpoints", "group_1.json"))
+    os.remove(os.path.join(out, "manifest.json"))
+    for store in STORES:
+        d = os.path.join(out, store, "group=1")
+        shutil.copy(sorted(glob.glob(os.path.join(d, "*.parquet")))[0],
+                    os.path.join(d, "part-00099.parquet"))
+        with open(os.path.join(d, ".part-00000.parquet.7.tmp"), "wb") as f:
+            f.write(b"PAR1 torn")
+    resumed = build_index(spark, src, out, num_partitions=4, num_groups=2, resume=True)
+    for store in ("postings", "norms", "docmap", "terms"):
+        assert _rows(spark, os.path.join(out, store)) == _rows(
+            spark, os.path.join(ref, store)
+        ), store
+        assert not glob.glob(os.path.join(out, store, "*", ".*.tmp"))
+    assert check_index(out, spark)["doc_count"] == resumed["doc_count"] == 300
+
+
+def _merged_and_appended(spark, tmp_path, drop_partials):
+    from lucene_rust_spark.corpus import gen_corpus_spark
+    from lucene_rust_spark.index.build import build_index
+    from lucene_rust_spark.index.merge import merge_segments
+    from lucene_rust_spark.streaming.incremental import append_batch
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "idx")
+    build_index(spark, gen_corpus_spark(spark, 200, 4), out, num_partitions=4)
+    merge_segments(spark, out, fan_in=4)
+    if drop_partials:
+        import shutil
+
+        shutil.rmtree(os.path.join(out, "terms_partial"))
+    extra = gen_corpus_spark(spark, 20, 2).withColumn(
+        "repo", F.concat(F.lit("post_"), F.col("repo"))
+    )
+    return out, append_batch(spark, extra, out, epoch=0, num_partitions=2)
+
+
+def test_check_index_reads_live_generation(spark, tmp_path):
+    """CheckIndex reads the live generation's stamped files: after a merge
+    moved postings to postings_gN and an append added docs beside them,
+    the fixed postings/ dir holds neither, and reading it used to fail
+    the total-term-freq check on a healthy index."""
+    from lucene_rust_spark.index.manifest import check_index
+
+    out, m = _merged_and_appended(spark, tmp_path, drop_partials=False)
+    facts = check_index(out, spark)
+    assert facts["doc_count"] == m["doc_count"] == 220
+    assert facts["sum_ttf"] == m["sum_total_term_freq"]
+
+
+def test_append_restores_missing_term_partials(spark, tmp_path):
+    """An index without terms partials (its reclaiming merge ran under
+    code that deleted them all): append_batch first rewrites them from
+    the committed postings' block metadata, so the new terms dict's
+    df/ttf cover the old docs and the appended ones."""
+    from lucene_rust_spark.index.build import block_term_stats
+
+    out, m = _merged_and_appended(spark, tmp_path, drop_partials=True)
+    cols = ["term", "doc_freq", "total_term_freq", "n_blocks"]
+    got = _rows(spark, os.path.join(out, m["terms_dir"]), cols)
+    want = block_term_stats(spark.read.parquet(os.path.join(out, m["postings_dir"])))
+    assert got == sorted(map(tuple, want.select(*cols).collect()))
+    assert {os.path.basename(d) for d in glob.glob(os.path.join(out, "terms_partial", "group=*"))} == {
+        "group=0", "group=1000000"
+    }
+
+
+def test_tokenless_append_keeps_stores_readable(spark, tmp_path):
+    """A batch whose docs have no token writes no postings or partial
+    rows; the group still gets one empty file per store, as Spark's
+    empty write did, so the stores, CheckIndex and the terms dict read
+    as before, with the docs counted."""
+    import pandas as pd
+
+    from lucene_rust_spark.corpus import gen_corpus_spark
+    from lucene_rust_spark.index.build import build_index
+    from lucene_rust_spark.index.manifest import check_index
+    from lucene_rust_spark.streaming.incremental import append_batch
+
+    out = str(tmp_path / "idx")
+    m0 = build_index(spark, gen_corpus_spark(spark, 40, 2), out, num_partitions=2)
+    blank = spark.createDataFrame(pd.DataFrame(
+        {"repo": ["b"] * 3, "path": [f"b/{i}" for i in range(3)], "commit": ["c"] * 3,
+         "lang": ["en"] * 3, "content": ["", "!!!", " \n"]}
+    ))
+    m = append_batch(spark, blank, out, epoch=0, num_partitions=2)
+    st = m["metrics"]["stores"]
+    assert st["postings"]["files"] == st["terms_partial"]["files"] == 1
+    assert st["postings"]["rows"] == st["terms_partial"]["rows"] == 0
+    assert st["norms"]["rows"] == st["docmap"]["rows"] == 3
+    assert check_index(out, spark)["doc_count"] == m0["doc_count"] + 3
+    cols = ["term", "doc_freq", "total_term_freq", "n_blocks", "ordinal"]
+    assert _rows(spark, os.path.join(out, m["terms_dir"]), cols) == _rows(
+        spark, os.path.join(out, "terms"), cols
+    )

@@ -9,11 +9,10 @@ import pytest
 
 from lucene_rust_spark.functions import kernels as K
 from lucene_rust_spark.index.build import (
-    DOCMAP_TERM,
-    NORM_TERM,
+    PARTITION_SHIFT,
     _count_batch,
     _count_batch_arrow,
-    _dwpt_partition_arrow,
+    _dwpt_partition,
     block_impacts,
     block_impacts_batch,
 )
@@ -61,13 +60,13 @@ def test_count_batch_arrow_sliced_buffer():
     assert toks == [(0, "abc"), (1, "def"), (1, "ghi")]
 
 
-def _meta_batch(docs, parts):
+def _meta_batch(docs, parts, base=0):
     n = len(docs)
     return pa.RecordBatch.from_pydict(
         {
             "part": pa.array(parts, type=pa.int32()),
             "repo": [f"r{i % 2}" for i in range(n)],
-            "path": [f"p/{i}" for i in range(n)],
+            "path": [f"p/{base + i}" for i in range(n)],
             "commit": [f"c{i:02d}" for i in range(n)],
             "lang": ["en"] * n,
             "content": pa.array(docs, type=pa.string()),
@@ -78,22 +77,28 @@ def _meta_batch(docs, parts):
 def test_dwpt_arrow_nonascii_falls_back_identically():
     # a non-ASCII batch routes through the regex path (an ASCII batch in
     # the same task takes the byte-LUT path): the kernel's blocks must
-    # decode to the (term, doc, tf, positions) the regex reference counts
+    # decode to the (term, doc, tf, positions) the regex reference counts,
+    # and its norms and docmap hold every doc once, in doc_id order
     batches = [
         (["café naïve merge", "merge window", "λx x", "plain ascii only"], [0, 1, 0, 1]),
-        (["merge plain", "window x x"], [1, 0]),
+        (["merge plain", "window x x", ""], [1, 0, 1]),
     ]
-    out = pd.concat(
-        [b.to_pandas() for b in _dwpt_partition_arrow(
-            iter([_meta_batch(d, p) for d, p in batches]), positions=True
-        )],
-        ignore_index=True,
+    postings, norms, docmap = _dwpt_partition(
+        iter([_meta_batch(d, p, 10 * i) for i, (d, p) in enumerate(batches)]),
+        positions=True,
     )
-    # row → doc_id through the docmap sentinel (rows in arrival order)
-    (blob,) = out.loc[out["term"] == DOCMAP_TERM, "docs_bin"]
-    row_doc = pa.ipc.open_stream(blob).read_all().column("doc_id").to_numpy()
+    # row → doc_id through the docmap (paths are unique per row)
+    dm = docmap.to_pandas()
+    assert dm["doc_id"].is_monotonic_increasing
+    assert norms.column("doc_id").to_pylist() == dm["doc_id"].tolist()
+    paths = [f"p/{10 * i + j}" for i, (d, _) in enumerate(batches) for j in range(len(d))]
+    row_doc = dm.set_index("path").loc[paths, "doc_id"].to_numpy()
+    parts = np.array([p for _, b in batches for p in b], dtype=np.int64)
+    assert ((row_doc >> PARTITION_SHIFT) == parts).all()
     got = {}
-    for r in out[~out["term"].isin([NORM_TERM, DOCMAP_TERM])].itertuples():
+    keys = list(zip(postings["term"], postings["seg"], postings["block_no"]))
+    assert keys == sorted(keys)  # string (term, seg, block_no) order
+    for r in postings.itertuples():
         docs = r.first_doc + np.cumsum(K.for_unpack(r.docs_bin, r.n)).astype(np.int64)
         tfs = K.for_unpack(r.tfs_bin, r.n).astype(np.int64)
         pos = K.for_unpack(r.pos_bin, int(tfs.sum())).astype(np.int64)
@@ -101,10 +106,13 @@ def test_dwpt_arrow_nonascii_falls_back_identically():
         for d, tf, e, q in zip(docs, tfs, ends, r.dlq_bin):
             got[(int(d), r.term)] = (q, int(tf), tuple(np.cumsum(pos[e - tf : e]).tolist()))
     docs = [d for b, _ in batches for d in b]
-    parts = np.array([p for _, b in batches for p in b], dtype=np.int64)
-    ref, _ = _pairs(_count_batch(np.arange(len(docs)), parts, pd.Series(docs), True), True)
+    ref, dl = _pairs(_count_batch(np.arange(len(docs)), parts, pd.Series(docs), True), True)
     want = {(int(row_doc[row]), t): v[1:] for (row, t), v in ref.items()}
     assert got == want
+    # norms: the exact token count of every doc, the empty one included
+    nm = norms.to_pandas().set_index("doc_id").loc[row_doc]
+    assert nm["dl"].tolist() == dl
+    assert nm["dlq"].tolist() == K.int_to_byte4(np.array(dl)).tolist()
 
 
 @pytest.mark.parametrize("num_groups", [1, 3])

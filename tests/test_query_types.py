@@ -4,6 +4,7 @@ dismax, and alternative similarities."""
 
 import pytest
 
+from lucene_rust_spark.index.manifest import committed_files
 from lucene_rust_spark.oracle.bm25 import bool_query, oracle_search, term_query
 
 CASES = [
@@ -200,6 +201,9 @@ def test_fused_vs_shuffle_bool_plans(spark, searcher, t1_index, monkeypatch, tmp
         bool_query(should=["token", "value", "index"], min_should_match=2),
     ] + _seeded_bool_queries(searcher, seed=6, n=8)
     saved = searcher.DRIVER_EXEC_MAX_POSTINGS
+    # a fresh build: one postings file per flush task, each spanning the
+    # vocabulary (test_build.py checks the layout)
+    assert len(committed_files(searcher.index_dir, searcher.manifest, "postings")) >= 2
     try:
         _assert_paths_agree(searcher, queries, S, monkeypatch)
         # hits_df (k=None): the same kernel, every match, unranked
@@ -259,6 +263,33 @@ def test_fused_vs_shuffle_bool_plans(spark, searcher, t1_index, monkeypatch, tmp
         _assert_paths_agree(past, queries, S, monkeypatch)
     finally:
         past.close()
+
+
+def test_paths_agree_after_multi_file_append(spark, searcher, t1_index, monkeypatch, tmp_path):
+    """An append whose flush writes several files per store: the driver
+    path, the reader task and the shuffle plan still agree, page 2s
+    included, over the build's files and the appended group's."""
+    import shutil
+
+    import lucene_rust_spark.search.searcher as S
+    from lucene_rust_spark.corpus import gen_corpus_spark
+    from lucene_rust_spark.search.searcher import IndexSearcher
+    from lucene_rust_spark.streaming.incremental import append_batch
+
+    out, _ = t1_index
+    copy = str(tmp_path / "t1_copy")
+    shutil.copytree(out, copy)
+    append_batch(spark, gen_corpus_spark(spark, 200, 4), copy, epoch=0, num_partitions=4)
+    s = IndexSearcher(spark, copy, cache=True)
+    try:
+        for store in ("postings", "norms", "docmap"):
+            files = committed_files(copy, s.manifest, store)
+            appended = [f for f in files if "group=1000000" in f]
+            assert len(appended) >= 2, store
+        queries = [term_query("token"), bool_query(should=["token", "value", "index"])]
+        _assert_paths_agree(s, queries + _seeded_bool_queries(s, seed=9, n=6), S, monkeypatch)
+    finally:
+        s.close()
 
 
 def test_fused_query_py4j_budget(spark, searcher, monkeypatch):
