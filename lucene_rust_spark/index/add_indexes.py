@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
+import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +35,7 @@ from lucene_rust_spark.index.build import (
     block_term_stats,
     ensure_term_partials,
     postings_without_partials,
-    sum_term_partials,
+    term_partial_dirs,
     write_terms_dict,
 )
 from lucene_rust_spark.index.manifest import commit_manifest, read_manifest
@@ -136,21 +138,23 @@ def add_indexes(spark: SparkSession, dest_dir: str, src_dir: str) -> dict:
     # terms: import the source's vocab-sized partials under the import
     # group (df/ttf are doc-id-independent), then rebuild the global dict
     # the same way streaming appends do
+    gdir = os.path.join(dest_dir, "terms_partial", f"group={gimp}")
     uncovered = postings_without_partials(src_dir, ms)
     if uncovered:  # the source is read-only: its stats straight from postings
-        agg_src = block_term_stats(spark.read.parquet(*uncovered))
-    else:
-        agg_src = sum_term_partials(
-            spark, sorted(glob.glob(os.path.join(src_dir, "terms_partial", "group=*")))
-        )
-    agg_src.write.mode("overwrite").parquet(
-        os.path.join(dest_dir, "terms_partial", f"group={gimp}")
-    )
-    partial_dirs = sorted(glob.glob(os.path.join(dest_dir, "terms_partial", "group=*")))
-    agg = sum_term_partials(spark, partial_dirs)  # holds the import just written
+        block_term_stats(spark.read.parquet(*uncovered)).write.mode("overwrite").parquet(gdir)
+    else:  # copied whole: the finalize sums a term's rows across files
+        shutil.rmtree(gdir, ignore_errors=True)
+        os.makedirs(gdir)
+        for i, d in enumerate(term_partial_dirs(src_dir)):
+            for f in sorted(glob.glob(os.path.join(d, "*.parquet"))):
+                shutil.copyfile(f, os.path.join(gdir, f"src{i:05d}-{os.path.basename(f)}"))
     width = spark.sparkContext.defaultParallelism
     terms_dir = f"terms_g{gen}"
-    write_terms_dict(agg, os.path.join(dest_dir, terms_dir), max(1, width // 8))
+    t0 = time.perf_counter()
+    write_terms_dict(
+        spark, term_partial_dirs(dest_dir), os.path.join(dest_dir, terms_dir), max(1, width // 8)
+    )
+    terms_dict_s = round(time.perf_counter() - t0, 3)
 
     imported = [
         {
@@ -180,6 +184,7 @@ def add_indexes(spark: SparkSession, dest_dir: str, src_dir: str) -> dict:
             "imported_groups": sorted(
                 set(md.get("imported_groups", ())) | {gimp}
             ),
+            "metrics": {"op": "add_indexes", "terms_dict_s": terms_dict_s},
         }
     )
     commit_manifest(dest_dir, manifest)

@@ -721,13 +721,21 @@ def _dwpt_partition(batches, positions: bool = False, stop_words=None, char_filt
 # min/max statistics, so a reader seeks within a file that spans the
 # task's whole vocabulary (search/block_reader.py, Spark's row-group filter)
 POSTINGS_ROW_GROUP_ROWS = 1 << 16
+# the largest terms dict the driver holds: write_terms_dict sums up to
+# this many partial rows on the driver, and IndexSearcher(cache=True)
+# preloads a dict of up to this many terms
+TERM_DICT_MAX = 2_000_000
 
 
 def _store_schemas() -> dict:
-    """Arrow schemas of the four stores a flush writes; the postings one
-    is also the merge's block schema."""
+    """Arrow schemas of the four stores a flush writes, and of the terms
+    dict; the postings one is also the merge's block schema."""
     import pyarrow as pa
 
+    partial = pa.schema(
+        [("term", pa.string()), ("doc_freq", pa.int64()),
+         ("total_term_freq", pa.int64()), ("n_blocks", pa.int64())]
+    )
     return {
         "postings": pa.schema(
             [
@@ -756,10 +764,8 @@ def _store_schemas() -> dict:
             [("doc_id", pa.int64())]
             + [(c, pa.string()) for c in ("repo", "path", "commit", "lang", "content_sha256")]
         ),
-        "terms_partial": pa.schema(
-            [("term", pa.string()), ("doc_freq", pa.int64()),
-             ("total_term_freq", pa.int64()), ("n_blocks", pa.int64())]
-        ),
+        "terms_partial": partial,
+        "terms": partial.append(pa.field("ordinal", pa.int64())),
     }
 
 
@@ -778,6 +784,7 @@ _WRITE_OPTS = {
         use_dictionary=["doc_freq", "total_term_freq", "n_blocks"], write_statistics=["term"]
     ),
 }
+_WRITE_OPTS["terms"] = _WRITE_OPTS["terms_partial"]
 
 
 def _write_store(table, store: str, path: str, attempt: int) -> int:
@@ -956,15 +963,9 @@ def block_term_stats(blocks: DataFrame, *by: str) -> DataFrame:
     )
 
 
-def sum_term_partials(spark: SparkSession, partial_dirs: list) -> DataFrame:
-    """Sum the per-group terms partials (block_term_stats outputs) under
-    partial_dirs into one (term, doc_freq, total_term_freq, n_blocks) row
-    per term: groups hold disjoint docs, so df/ttf/blocks add up."""
-    return spark.read.parquet(*partial_dirs).groupBy("term").agg(
-        F.sum("doc_freq").cast("long").alias("doc_freq"),
-        F.sum("total_term_freq").cast("long").alias("total_term_freq"),
-        F.sum("n_blocks").cast("long").alias("n_blocks"),
-    )
+def term_partial_dirs(index_dir: str) -> list[str]:
+    """Every group's terms partial dir under index_dir, sorted."""
+    return sorted(glob.glob(os.path.join(index_dir, "terms_partial", "group=*")))
 
 
 def postings_without_partials(index_dir: str, m: dict) -> list[str]:
@@ -1001,14 +1002,29 @@ def ensure_term_partials(spark: SparkSession, index_dir: str, m: dict) -> None:
     block_term_stats(blocks, "group").write.partitionBy("group").parquet(root)
 
 
-def write_terms_dict(agg: DataFrame, out_path: str, n_range_parts: int) -> None:
-    """Write a term-sorted dict with dense global ordinals (OrdinalMap,
-    clt/index/ordinal_map.rs:1-527). agg must have columns (term, doc_freq,
-    total_term_freq, n_blocks). Range partitions are term-ordered, so
-    ordinal = partition offset + local rank — two vocab-sized passes (local
-    ranks, then per-partition counts collected to offsets), never a
-    single-partition global sort. Shared by build finalize and streaming
-    append so built and appended dicts keep one schema."""
+def write_terms_dict(
+    spark: SparkSession, partial_dirs: list, out_path: str, n_range_parts: int
+) -> None:
+    """Sum the terms partials under partial_dirs (block_term_stats rows;
+    groups hold disjoint docs, so df/ttf/blocks add up) into the
+    term-sorted dict with dense global ordinals (OrdinalMap,
+    clt/index/ordinal_map.rs:1-527) at out_path, replacing it. The one
+    finalize of build, append, import and reclaiming merge, so every
+    dict keeps one schema.
+
+    The partials' footers give their row count without a Spark job. Up
+    to TERM_DICT_MAX rows the dict is summed, sorted and written on the
+    driver with pyarrow as one file. Above it, range partitions of
+    n_range_parts are term-ordered, so ordinal = partition offset + local
+    rank — two vocab-sized passes (local ranks, then per-partition counts
+    collected to offsets), never a single-partition global sort."""
+    import pyarrow.dataset as ds
+
+    files = [f for d in partial_dirs for f in sorted(glob.glob(os.path.join(d, "*.parquet")))]
+    partials = ds.dataset(files, schema=_store_schemas()["terms_partial"], format="parquet")
+    if partials.count_rows() <= TERM_DICT_MAX:
+        _write_terms_dict_driver(partials.to_table(), out_path)
+        return
 
     def _local_rank(batches):
         from pyspark import TaskContext
@@ -1020,6 +1036,11 @@ def write_terms_dict(agg: DataFrame, out_path: str, n_range_parts: int) -> None:
             base += len(pdf)
             yield pdf
 
+    agg = spark.read.parquet(*partial_dirs).groupBy("term").agg(
+        F.sum("doc_freq").cast("long").alias("doc_freq"),
+        F.sum("total_term_freq").cast("long").alias("total_term_freq"),
+        F.sum("n_blocks").cast("long").alias("n_blocks"),
+    )
     ranged = agg.repartitionByRange(max(1, n_range_parts), "term").sortWithinPartitions(
         "term"
     )
@@ -1041,6 +1062,24 @@ def write_terms_dict(agg: DataFrame, out_path: str, n_range_parts: int) -> None:
         .parquet(out_path)
     )
     loc.unpersist()
+
+
+def _write_terms_dict_driver(partials, out_path: str) -> None:
+    """The dict of a partials table, summed and term-sorted (UTF-8 byte
+    order, as Spark sorts strings) by pyarrow, written as one file."""
+    import pyarrow as pa
+
+    agg = partials.group_by("term").aggregate(
+        [("doc_freq", "sum"), ("total_term_freq", "sum"), ("n_blocks", "sum")]
+    ).sort_by("term")
+    terms = pa.table(
+        [agg["term"], agg["doc_freq_sum"], agg["total_term_freq_sum"], agg["n_blocks_sum"],
+         pa.array(np.arange(agg.num_rows, dtype=np.int64))],
+        schema=_store_schemas()["terms"],
+    )
+    shutil.rmtree(out_path, ignore_errors=True)
+    os.makedirs(out_path)
+    _write_store(terms, "terms", os.path.join(out_path, "part-00000.parquet"), 0)
 
 
 def build_index(
@@ -1110,12 +1149,8 @@ def build_index(
     # this serial tail is only O(vocab × groups), not O(postings)
     t0 = time.perf_counter()
     # every group job wrote its partial
-    partial_dirs = sorted(glob.glob(os.path.join(out_dir, "terms_partial", "group=*")))
-    write_terms_dict(
-        sum_term_partials(spark, partial_dirs),
-        os.path.join(out_dir, "terms"),
-        max(1, min(num_partitions // 8, 64)),
-    )
+    n_range = max(1, min(num_partitions // 8, 64))
+    write_terms_dict(spark, term_partial_dirs(out_dir), os.path.join(out_dir, "terms"), n_range)
     metrics["terms_dict_s"] = round(time.perf_counter() - t0, 3)
     # flush_s and the per-store files/rows/bytes sum the group checkpoints
     # (a resumed group reports its original flush)

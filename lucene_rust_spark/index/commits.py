@@ -300,6 +300,7 @@ def set_live_commit_data(index_dir: str, data: dict) -> dict:
     manifest = dict(m)
     manifest["user_data"] = {str(k): str(v) for k, v in dict(data).items()}
     manifest["generation"] = int(m["generation"]) + 1
+    manifest["metrics"] = {"op": "user_data"}
     commit_manifest(index_dir, manifest)
     return manifest
 

@@ -110,6 +110,7 @@ def delete_by_ids(
             "generation": gen,
             "del_count": hard.count() if hard is not None else 0,
             "soft_del_count": soft_t.count() if soft_t is not None else 0,
+            "metrics": {"op": "delete"},
         }
     )
     commit_manifest(index_dir, manifest)

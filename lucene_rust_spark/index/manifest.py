@@ -75,10 +75,10 @@ def prepare_commit(out_dir: str, manifest: dict) -> int:
     t0 = time.perf_counter()
     manifest.update(_snapshot_files(out_dir, manifest))
     metrics = manifest.get("metrics")
-    if metrics is not None and "commit_s" not in metrics:
-        # the writer's own phase timings (a copied manifest's already hold
-        # theirs): the snapshot is the commit's O(files) step; the two
-        # small fsync'd writes after it cannot time themselves
+    if metrics is not None:
+        # beside the writer's own phase timings: the snapshot is the
+        # commit's O(files) step; the two small fsync'd writes after it
+        # cannot time themselves
         manifest["metrics"] = {**metrics, "commit_s": round(time.perf_counter() - t0, 4)}
     gen = int(manifest["generation"])
     pending = os.path.join(out_dir, f"{PENDING_PREFIX}{gen}")

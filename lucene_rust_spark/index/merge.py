@@ -15,6 +15,7 @@ re-pack runs so interior blocks are full 128-entry FOR blocks again
 from __future__ import annotations
 
 import os
+import time
 
 import numpy as np
 import pandas as pd
@@ -372,11 +373,13 @@ def merge_segments(
             "segments": segments,
             "postings_dir": f"postings_g{gen}",
             "merge_fan_in": fan_in,
+            "metrics": {"op": "merge"},
         }
     )
     if live_stats:
         manifest["doc_count"] = sum(s["max_doc"] for s in segments)
         manifest["sum_total_term_freq"] = sum(s["sum_ttf"] for s in segments)
+        manifest["metrics"]["terms_dict_s"] = live_stats["terms_dict_s"]
     commit_manifest(index_dir, manifest)
     return manifest
 
@@ -463,11 +466,10 @@ def _reclaim_stores(spark, index_dir, m, gen, tomb_df, width):
     block_term_stats(merged_postings).write.mode("overwrite").parquet(
         os.path.join(partial, "group=0")
     )
-    write_terms_dict(
-        spark.read.parquet(os.path.join(partial, "group=0")),
-        os.path.join(index_dir, f"terms_g{gen}"),
-        max(1, width // 8),
-    )
+    t0 = time.perf_counter()
+    terms_out = os.path.join(index_dir, f"terms_g{gen}")
+    write_terms_dict(spark, [os.path.join(partial, "group=0")], terms_out, max(1, width // 8))
+    terms_dict_s = round(time.perf_counter() - t0, 3)
 
     folded = [
         os.path.relpath(d, index_dir)
@@ -484,4 +486,4 @@ def _reclaim_stores(spark, index_dir, m, gen, tomb_df, width):
             set(m.get("reclaimed_tombstone_dirs", ())) | set(folded)
         ),
     }
-    return {"per_seg": per_seg, "manifest_patch": patch}
+    return {"per_seg": per_seg, "manifest_patch": patch, "terms_dict_s": terms_dict_s}

@@ -22,7 +22,7 @@ from lucene_rust_spark.index.build import (
     _build_group,
     ensure_term_partials,
     reject_null_metadata,
-    sum_term_partials,
+    term_partial_dirs,
     with_partition,
     write_terms_dict,
 )
@@ -105,14 +105,10 @@ def append_batch(
     # written) — df/ttf are merge-invariant, and a reclaiming merge
     # leaves one partial of its merged postings.
     terms_dir = f"terms_g{manifest['generation']}"
-    import glob as _glob
-
     t0 = time.perf_counter()
-    partial_dirs = sorted(_glob.glob(os.path.join(index_dir, "terms_partial", "group=*")))
-    agg = sum_term_partials(spark, partial_dirs)
-    # same ordinal-bearing writer as build finalize: built and appended
-    # dicts keep one schema and the dense-ordinal invariant survives appends
-    write_terms_dict(agg, os.path.join(index_dir, terms_dir), max(1, width // 8))
+    write_terms_dict(
+        spark, term_partial_dirs(index_dir), os.path.join(index_dir, terms_dir), max(1, width // 8)
+    )
     manifest["terms_dir"] = terms_dir
     manifest["metrics"] = {
         "op": "append",

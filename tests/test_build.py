@@ -132,6 +132,8 @@ def test_global_term_ordinals(spark, t1_index):
     t = spark.read.parquet(os.path.join(out, "terms")).select("term", "ordinal").toPandas()
     t = t.sort_values("term").reset_index(drop=True)
     assert (t["ordinal"].to_numpy() == np.arange(len(t))).all()
+    # the build's partials fit TERM_DICT_MAX: the driver wrote one file
+    assert os.listdir(os.path.join(out, "terms")) == ["part-00000.parquet"]
 
 
 def test_block_impacts_frontier():
@@ -626,4 +628,165 @@ def test_tokenless_append_keeps_stores_readable(spark, tmp_path):
     cols = ["term", "doc_freq", "total_term_freq", "n_blocks", "ordinal"]
     assert _rows(spark, os.path.join(out, m["terms_dir"]), cols) == _rows(
         spark, os.path.join(out, "terms"), cols
+    )
+
+
+def _partial_table(terms, df, ttf, blocks):
+    import pyarrow as pa
+
+    from lucene_rust_spark.index.build import _store_schemas
+
+    return pa.table([terms, df, ttf, blocks], schema=_store_schemas()["terms_partial"])
+
+
+def test_terms_dict_driver_and_spark_paths_agree(spark, tmp_path, monkeypatch):
+    """write_terms_dict's driver path (partials at most TERM_DICT_MAX
+    rows) and its Spark path give the same dict, column by column and
+    dtype by dtype: sums, UTF-8 byte (code-point) term order — not
+    UTF-16 order, where an astral term sorts before U+FF41 — and dense
+    ordinals. Partials: pyarrow-written term-sorted files, an empty file
+    (a token-less group) and a Spark-written dir with _SUCCESS."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from lucene_rust_spark.index import build as B
+
+    terms = ["a", "zeta", "\u00e9t\u00e9", "\uff41", "\U0001f600", "\U0001f600x", "\u4e2d"]
+    dirs = [str(tmp_path / "p" / f"group={g}") for g in range(3)]
+    for d in dirs[:2]:
+        os.makedirs(d)
+    B._write_store(_partial_table(sorted(terms[:5]), [1, 2, 3, 4, 5], [2, 4, 6, 8, 10],
+                                  [1, 1, 1, 1, 1]), "terms_partial",
+                   os.path.join(dirs[0], "part-00000.parquet"), 0)
+    B._write_store(_partial_table(sorted(terms[2:]), [1] * 5, [7] * 5, [2] * 5),
+                   "terms_partial", os.path.join(dirs[0], "part-00001.parquet"), 0)
+    B._write_store(B._store_schemas()["terms_partial"].empty_table(), "terms_partial",
+                   os.path.join(dirs[1], "part-00000.parquet"), 0)
+    spark.createDataFrame(
+        pd.DataFrame({"term": ["\uff41", "b", "\U0001f600"], "doc_freq": [10, 20, 30],
+                      "total_term_freq": [11, 21, 31], "n_blocks": [1, 1, 3]}),
+        "term string, doc_freq long, total_term_freq long, n_blocks long",
+    ).repartition(2).write.parquet(dirs[2])
+    assert os.path.exists(os.path.join(dirs[2], "_SUCCESS"))
+
+    B.write_terms_dict(spark, dirs, str(tmp_path / "driver"), 2)
+    monkeypatch.setattr(B, "TERM_DICT_MAX", 0)
+    B.write_terms_dict(spark, dirs, str(tmp_path / "spark"), 2)
+    assert os.listdir(tmp_path / "driver") == ["part-00000.parquet"]
+    assert "_SUCCESS" in os.listdir(tmp_path / "spark")
+
+    def read(name):
+        t = pq.read_table(str(tmp_path / name)).to_pandas()
+        return t.sort_values("ordinal").reset_index(drop=True)
+
+    drv, spk = read("driver"), read("spark")
+    pd.testing.assert_frame_equal(drv, spk)
+    assert spark.read.parquet(str(tmp_path / "driver")).schema == spark.read.parquet(
+        str(tmp_path / "spark")
+    ).schema
+    want = sorted(set(terms) | {"b"})
+    assert drv["term"].tolist() == want
+    assert want.index("\U0001f600") > want.index("\uff41")
+    assert drv["ordinal"].tolist() == list(range(len(want)))
+    row = drv.set_index("term").loc["\U0001f600"]
+    assert (row["doc_freq"], row["total_term_freq"], row["n_blocks"]) == (5 + 1 + 30, 10 + 7 + 31, 1 + 2 + 3)
+
+
+def test_terms_dict_of_no_partials_is_empty(spark, tmp_path):
+    """Zero partial files give an empty dict Spark reads with the
+    five-column schema."""
+    from lucene_rust_spark.index.build import write_terms_dict
+
+    out = str(tmp_path / "terms")
+    write_terms_dict(spark, [], out, 1)
+    t = spark.read.parquet(out)
+    assert [(f.name, f.dataType.simpleString()) for f in t.schema] == [
+        ("term", "string"), ("doc_freq", "bigint"), ("total_term_freq", "bigint"),
+        ("n_blocks", "bigint"), ("ordinal", "bigint"),
+    ]
+    assert t.count() == 0
+
+
+# a 1-group build of a source with non-nullable metadata: the group
+# job's shuffle map stage and its flush collect, and no job in the terms
+# finalize (which ran 8 before it moved to the driver)
+BUILD_SPARK_JOBS = 2
+
+
+def test_build_finalize_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """A 1-group build's write_terms_dict (driver path) starts no Spark
+    job, and the whole build runs BUILD_SPARK_JOBS, counted with a job
+    group and sc.statusTracker()."""
+    from lucene_rust_spark.corpus import gen_corpus_pandas
+    from lucene_rust_spark.index import build as B
+
+    # metadata columns declared non-nullable need no NULL probe, whose
+    # limit scan runs 1-3 jobs by file layout
+    src = spark.createDataFrame(
+        gen_corpus_pandas(200).drop(columns=["row_id"]),
+        "repo string not null, path string not null, commit string not null, "
+        "lang string, content string",
+    )
+    sc = spark.sparkContext
+    group = "build-finalize-jobs"
+    tracker = sc.statusTracker()
+    seen = []
+    real = B.write_terms_dict
+
+    def counted(*a, **kw):
+        before = len(tracker.getJobIdsForGroup(group))
+        real(*a, **kw)
+        seen.append(len(tracker.getJobIdsForGroup(group)) - before)
+
+    monkeypatch.setattr(B, "write_terms_dict", counted)
+    sc.setJobGroup(group, "1-group build")
+    try:
+        B.build_index(spark, src, str(tmp_path / "idx"), num_partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert seen == [0]
+    assert len(tracker.getJobIdsForGroup(group)) == BUILD_SPARK_JOBS
+
+
+def test_every_writer_records_its_own_metrics(spark, tmp_path):
+    """Each writer replaces manifest["metrics"] with its own: op, the
+    terms_dict_s of a writer that wrote a dict, and the commit_s that
+    prepare_commit stamps — build → merge → delete → append → reclaiming
+    merge → add_indexes. The import's dict equals the block stats of
+    all its postings."""
+    from lucene_rust_spark.corpus import gen_corpus_spark
+    from lucene_rust_spark.index.add_indexes import add_indexes
+    from lucene_rust_spark.index.build import block_term_stats, build_index
+    from lucene_rust_spark.index.deletes import delete_by_ids
+    from lucene_rust_spark.index.manifest import committed_files, read_manifest
+    from lucene_rust_spark.index.merge import merge_segments
+    from lucene_rust_spark.streaming.incremental import append_batch
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "idx")
+    src = gen_corpus_spark(spark, 120, 2)
+    steps = [("build", build_index(spark, src, out, num_partitions=2))]
+    steps.append(("merge", merge_segments(spark, out, fan_in=2)))
+    doc_ids = [r["doc_id"] for r in spark.read.parquet(os.path.join(out, "docmap")).limit(3).collect()]
+    steps.append(("delete", delete_by_ids(spark, out, doc_ids)))
+    extra = gen_corpus_spark(spark, 20, 2).withColumn("repo", F.concat(F.lit("x_"), F.col("repo")))
+    steps.append(("append", append_batch(spark, extra, out, epoch=0, num_partitions=2)))
+    steps.append(("merge", merge_segments(spark, out, fan_in=4)))
+    other = str(tmp_path / "other")
+    build_index(spark, gen_corpus_spark(spark, 30, 2), other, num_partitions=2)
+    steps.append(("add_indexes", add_indexes(spark, out, other)))
+    with_dict = {"build", "append", "add_indexes"}
+    for i, (op, m) in enumerate(steps):
+        # the committed record: prepare_commit stamps a copy
+        with open(os.path.join(out, "commits", f"segments_{m['generation']}.json")) as f:
+            mt = json.load(f)["metrics"]
+        assert mt["op"] == op, (i, mt)
+        assert mt["commit_s"] >= 0, (i, mt)
+        # the second merge reclaims the delete, so it rewrites the dict
+        assert ("terms_dict_s" in mt) == (op in with_dict or i == 4), (i, mt)
+    m = read_manifest(out)
+    cols = ["term", "doc_freq", "total_term_freq", "n_blocks"]
+    want = block_term_stats(spark.read.parquet(*committed_files(out, m, m["postings_dir"])))
+    assert _rows(spark, os.path.join(out, m["terms_dir"]), cols) == sorted(
+        map(tuple, want.select(*cols).collect())
     )
