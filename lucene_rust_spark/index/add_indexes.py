@@ -147,7 +147,12 @@ def add_indexes(spark: SparkSession, dest_dir: str, src_dir: str) -> dict:
         os.makedirs(gdir)
         for i, d in enumerate(term_partial_dirs(src_dir)):
             for f in sorted(glob.glob(os.path.join(d, "*.parquet"))):
-                shutil.copyfile(f, os.path.join(gdir, f"src{i:05d}-{os.path.basename(f)}"))
+                # a dot-file temp name, as the flush writes: a crash
+                # mid-copy leaves no truncated file for readers to list
+                name = f"src{i:05d}-{os.path.basename(f)}"
+                tmp = os.path.join(gdir, f".{name}.tmp")
+                shutil.copyfile(f, tmp)
+                os.replace(tmp, os.path.join(gdir, name))
     width = spark.sparkContext.defaultParallelism
     terms_dir = f"terms_g{gen}"
     t0 = time.perf_counter()

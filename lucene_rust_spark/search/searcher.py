@@ -42,7 +42,6 @@ from pyspark.sql import types as T
 
 from lucene_rust_spark.functions import kernels as K
 from lucene_rust_spark.functions.similarities import BM25, get_similarity
-from lucene_rust_spark.index.build import TERM_DICT_MAX
 from lucene_rust_spark.index.manifest import committed_files, read_manifest
 from lucene_rust_spark.oracle.bm25 import query_terms
 from lucene_rust_spark.search.rewrite import (
@@ -83,6 +82,8 @@ DRIVER_EXEC_MAX_POSTINGS = 1_000_000
 # score/combine/rank pipeline still runs per query). Bounded by postings
 # held; invalidated with the searcher view (refresh() rebuilds the reader)
 DRIVER_POSTINGS_CACHE_MAX = 4_000_000
+# open(cache=True) preloads the terms dict onto the driver up to this size
+TERM_DICT_MAX = 2_000_000
 # mapInPandas output schema of the fused plan: a StructType is sent as JSON,
 # where a DDL string costs a parse round-trip to the JVM per query
 _HITS_SCHEMA = T.StructType(

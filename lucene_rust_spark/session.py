@@ -168,28 +168,13 @@ def unix_socket_dir(candidates=None) -> str | None:
     return None
 
 
-def session_size(cores: int | None = None, driver_memory: str | None = None) -> tuple[int, str]:
-    """(cores, driver_memory) of a local session. An explicit argument
-    wins, then SPARK_GRAFT_CPUS for the cores; otherwise the machine
-    sizes it: the CPUs this process may run on, and a quarter of the
-    physical memory (MemTotal, from sysconf) for the driver heap, the
-    rest staying for the Python workers and the page cache."""
-    if not cores:
-        env = os.environ.get("SPARK_GRAFT_CPUS")
-        cores = int(env) if env else len(os.sched_getaffinity(0))
-    if not driver_memory:
-        mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-        driver_memory = f"{max(1, mem // 4 // 2**30)}g"
-    return cores, driver_memory
-
-
 def get_spark(
     app: str = "lucene_rust_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str | None = None,
+    driver_memory: str = "48g",
 ) -> SparkSession:
-    cores, driver_memory = session_size(cores, driver_memory)
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(32, cores)
     builder = SparkSession.builder
     # a running context keeps its daemon and transport: skip the probes

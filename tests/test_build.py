@@ -132,7 +132,8 @@ def test_global_term_ordinals(spark, t1_index):
     t = spark.read.parquet(os.path.join(out, "terms")).select("term", "ordinal").toPandas()
     t = t.sort_values("term").reset_index(drop=True)
     assert (t["ordinal"].to_numpy() == np.arange(len(t))).all()
-    # the build's partials fit TERM_DICT_MAX: the driver wrote one file
+    # the build's partials are under TERM_PARTIALS_DRIVER_MAX_ROWS: the
+    # driver wrote one file
     assert os.listdir(os.path.join(out, "terms")) == ["part-00000.parquet"]
 
 
@@ -640,11 +641,11 @@ def _partial_table(terms, df, ttf, blocks):
 
 
 def test_terms_dict_driver_and_spark_paths_agree(spark, tmp_path, monkeypatch):
-    """write_terms_dict's driver path (partials at most TERM_DICT_MAX
-    rows) and its Spark path give the same dict, column by column and
-    dtype by dtype: sums, UTF-8 byte (code-point) term order — not
-    UTF-16 order, where an astral term sorts before U+FF41 — and dense
-    ordinals. Partials: pyarrow-written term-sorted files, an empty file
+    """write_terms_dict's driver path (partials of at most
+    TERM_PARTIALS_DRIVER_MAX_ROWS rows) and its Spark path give the same
+    dict, column by column and dtype by dtype: sums, UTF-8 byte
+    (code-point) term order — not UTF-16 order, where an astral term
+    sorts before U+FF41 — and dense ordinals. Partials: pyarrow-written term-sorted files, an empty file
     (a token-less group) and a Spark-written dir with _SUCCESS."""
     import pandas as pd
     import pyarrow.parquet as pq
@@ -670,7 +671,7 @@ def test_terms_dict_driver_and_spark_paths_agree(spark, tmp_path, monkeypatch):
     assert os.path.exists(os.path.join(dirs[2], "_SUCCESS"))
 
     B.write_terms_dict(spark, dirs, str(tmp_path / "driver"), 2)
-    monkeypatch.setattr(B, "TERM_DICT_MAX", 0)
+    monkeypatch.setattr(B, "TERM_PARTIALS_DRIVER_MAX_ROWS", 0)
     B.write_terms_dict(spark, dirs, str(tmp_path / "spark"), 2)
     assert os.listdir(tmp_path / "driver") == ["part-00000.parquet"]
     assert "_SUCCESS" in os.listdir(tmp_path / "spark")

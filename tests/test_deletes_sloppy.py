@@ -332,7 +332,8 @@ def test_append_keeps_terms_schema_and_ordinals(spark, tmp_path):
     t = spark.read.parquet(os.path.join(out, m["terms_dir"]))
     assert set(f.name for f in t.schema) == set(f.name for f in built_schema)
     assert t.schema == built_schema
-    # both dicts fit TERM_DICT_MAX: the driver wrote each as one file
+    # both partial sets are under TERM_PARTIALS_DRIVER_MAX_ROWS: the driver
+    # wrote each dict as one file
     for d in ("terms", m["terms_dir"]):
         assert os.listdir(os.path.join(out, d)) == ["part-00000.parquet"], d
     pdf = t.select("term", "ordinal").toPandas().sort_values("term").reset_index(drop=True)

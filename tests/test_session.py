@@ -169,21 +169,3 @@ def test_python_tasks_run_over_unix_sockets(spark):
     assert _fits(conf.get("spark.python.unix.domain.socket.dir"))
     got = spark.range(0, 3, 1, 1).mapInPandas(lambda it: it, "id long").collect()
     assert [r["id"] for r in got] == [0, 1, 2]
-
-
-def test_session_size_from_machine_env_and_arguments(monkeypatch):
-    """get_spark's defaults (no JVM here): cores are SPARK_GRAFT_CPUS, else
-    the CPUs this process may run on; driver memory is a quarter of the
-    physical memory, at least 1g. Explicit arguments win."""
-    from lucene_rust_spark import session
-
-    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": 15 * 2**30 // 4096}
-    monkeypatch.setattr(os, "sysconf", lambda name: pages[name])
-    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
-    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    assert session.session_size() == (3, "3g")
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
-    assert session.session_size() == (6, "3g")
-    assert session.session_size(cores=8, driver_memory="8g") == (8, "8g")
-    pages["SC_PHYS_PAGES"] = 2**30 // 4096
-    assert session.session_size() == (6, "1g")
